@@ -6,23 +6,25 @@ import org.apache.spark.sql.SparkSession
   * driver never runs this). Runs each named query `reps` times per
   * variant, ALTERNATING variants within one JVM so JIT/GC/load drift
   * hits both sides equally (the round-15/17 lesson: sequential A-then-B
-  * comparisons recorded up to 2× phantoms). A variant is a set of
-  * system properties (e.g. the `graft.bfs.cache` hook); variants are
-  * applied before each run and cleared after.
+  * comparisons recorded up to 2× phantoms). A variant is a comma-joined
+  * set of `conf:<runtime SQL conf>=<value>` settings (anything else is
+  * set as a system property); variants are applied before each run and
+  * cleared after.
   *
-  *   runMain graft.PerfAB q146 7 graft.bfs.cache=persist graft.bfs.cache=checkpoint
+  *   runMain graft.PerfAB q146 7 conf:spark.sql.adaptive.enabled=true conf:spark.sql.adaptive.enabled=false
   *
-  * prints per-variant min/median plus every raw sample.
+  * prints per-variant min/median plus every raw sample. Flags among the
+  * variants: `--jobs` prints every Spark job's and stage's wall time
+  * (the per-stage profile for loop-heavy queries); `--split` reports
+  * build and execute time separately.
   */
 object PerfAB {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val names = args(0).split(',').toSeq
     val reps = args(1).toInt
-    val variants: Seq[String] = args.drop(2).toSeq match {
-      case Nil => Seq("")
-      case vs => vs
-    }
+    val (flags, rest) = args.drop(2).toSeq.partition(_.startsWith("--"))
+    val variants: Seq[String] = if (rest.isEmpty) Seq("") else rest
     val spark = SparkSession.builder()
       .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
       .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
@@ -34,10 +36,7 @@ object PerfAB {
       .filter { case (n, _) => names.exists(n.contains) }
     require(queries.nonEmpty, s"no query matches ${names.mkString(",")}")
 
-    // GRAFT_AB_JOBS=1: print every Spark job's wall time + call site —
-    // the per-stage profile for loop-heavy queries
-    val profileJobs = sys.env.get("GRAFT_AB_JOBS").contains("1")
-    if (profileJobs) spark.sparkContext.addSparkListener(
+    if (flags.contains("--jobs")) spark.sparkContext.addSparkListener(
       new org.apache.spark.scheduler.SparkListener {
         private val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
         override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
@@ -91,9 +90,8 @@ object PerfAB {
     }
     val samples = scala.collection.mutable.Map
       .empty[(String, String), List[Double]].withDefaultValue(Nil)
-    // GRAFT_AB_SPLIT=1: report build (compile incl. any loop actions)
-    // and execute (the noop write) separately
-    val split = sys.env.get("GRAFT_AB_SPLIT").contains("1")
+    // build = compile incl. any loop actions; execute = the noop write
+    val split = flags.contains("--split")
     for (_ <- 1 to reps; (name, fn) <- queries; v <- variants) {
       applyVariant(v)
       def gcMillis(): Long = {

@@ -14,17 +14,39 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Parquet footer schemas keyed by path + (mtime, size), so repeated
+  /** Parquet footer schemas, one entry per table path, so repeated
     * reads of the same table skip the per-read schema-INFERENCE job
     * (`spark.read.parquet` with no declared schema samples footers in a
     * driver job — 30–100 ms per call here, and a many-file listing+read
     * at a 100 TB table root). This is the in-repo equivalent of a
     * metastore-declared schema: METADATA only — no rows, no statistics,
-    * no results are retained, and a changed file (mtime/size) misses the
-    * cache and re-infers. `-Dgraft.schema.cache=off` restores per-read
-    * inference (the A/B hook). */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
+    * no results are retained. Each entry carries the [[fingerprint]] it
+    * was inferred under; a changed fingerprint re-infers and replaces
+    * the entry, so the map stays bounded by the number of tables. */
+  private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
+    String, (String, org.apache.spark.sql.types.StructType)]()
+
+  /** (mtime, size) of a table file; for a directory-backed table, the
+    * (relative name, mtime, size) of every file under it — rewriting a
+    * part file in place changes neither the directory's mtime nor its
+    * size. None when the path cannot be read (no caching). */
+  private def fingerprint(path: String): Option[String] = try {
+    import java.nio.file.{Files, Path, Paths}
+    import java.nio.file.attribute.BasicFileAttributes
+    def stamp(p: Path): String = {
+      val a = Files.readAttributes(p, classOf[BasicFileAttributes])
+      s"${a.lastModifiedTime.toMillis}:${a.size}"
+    }
+    val root = Paths.get(path)
+    if (!Files.isDirectory(root)) Some(stamp(root))
+    else {
+      val walk = Files.walk(root)
+      try {
+        val files = walk.filter(Files.isRegularFile(_)).toArray.map(_.asInstanceOf[Path])
+        Some(files.map(f => s"${root.relativize(f)}@${stamp(f)}").sorted.mkString("|"))
+      } finally walk.close()
+    }
+  } catch { case scala.util.control.NonFatal(_) => None }
 
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     // Older testdata vintages stored parquet TIMESTAMP(NANOS), which
@@ -48,10 +70,8 @@ object Tables {
     // OUT via the marker conf set in LlmShared.registerFunctions —
     // bytes do not predict CPU for posting-list pair explodes, and
     // size-first coalescing serialized their hottest loops (measured
-    // q24 2.15→3.23 s). `-Dgraft.aqe.parallelismFirst=default` leaves
-    // Spark's default everywhere (the A/B hook).
-    if (!sys.props.get("graft.aqe.parallelismFirst").contains("default") &&
-        !spark.conf.getOption("spark.graft.aqe.keepParallelismFirst").contains("true"))
+    // q24 2.15→3.23 s).
+    if (!spark.conf.getOption("spark.graft.aqe.keepParallelismFirst").contains("true"))
       spark.conf.set("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
     // Self-install the trailing-sort projection deferral (see the rule's
     // doc) for sessions built without GraftExtensions — every engine
@@ -65,17 +85,16 @@ object Tables {
         spark.experimental.extraOptimizations ++= Seq(deferRule)
     }
     val path = s"$sfDir/$name.parquet"
-    val cacheKey: Option[String] =
-      if (sys.props.get("graft.schema.cache").contains("off")) None
-      else try {
-        val a = java.nio.file.Files.readAttributes(
-          java.nio.file.Paths.get(path),
-          classOf[java.nio.file.attribute.BasicFileAttributes])
-        Some(s"$path@${a.lastModifiedTime.toMillis}:${a.size}")
-      } catch { case _: Throwable => None }
-    val df = cacheKey match {
-      case Some(key) =>
-        val schema = schemaCache.computeIfAbsent(key, _ => spark.read.parquet(path).schema)
+    val df = fingerprint(path) match {
+      case Some(fp) =>
+        val cached = schemaCache.get(path)
+        val schema =
+          if (cached != null && cached._1 == fp) cached._2
+          else {
+            val inferred = spark.read.parquet(path).schema
+            schemaCache.put(path, (fp, inferred))
+            inferred
+          }
         spark.read.schema(schema).parquet(path)
       case None => spark.read.parquet(path)
     }

@@ -182,10 +182,10 @@ object KqlCompiler {
     val p = new Parser(Lexer.tokens(kql), resolve, now, None)
     var ok = false
     try {
-      val df = prof0("statements")(p.statements())
+      val df = p.statements()
       p.expectEnd()
       logWarnings(p)
-      prof0("arm")(armMaterializeRelease(p.materializedFrames.toSeq, Seq(df)))
+      armMaterializeRelease(p.materializedFrames.toSeq, Seq(df))
       ok = true
       df
     } finally {
@@ -225,11 +225,15 @@ object KqlCompiler {
   /** Compile with an explicit session — required only when the query
     * STARTS from a table generator (`range`/`print`/`datatable`) and no
     * active/default session can be assumed (e.g. concurrent test
-    * suites); table-rooted queries never need it. */
+    * suites); table-rooted queries never need it. `localGraph = false`
+    * pins the graph operators (components, shortest paths) to their
+    * distributed loops instead of the size-gated driver-local kernels —
+    * the parity reference. */
   def compile(kql: String, resolve: String => DataFrame, now: java.time.Instant,
-              spark: org.apache.spark.sql.SparkSession): DataFrame = {
+              spark: org.apache.spark.sql.SparkSession,
+              localGraph: Boolean = true): DataFrame = {
     retirePendingMaterialize(Some(spark))
-    val p = new Parser(Lexer.tokens(kql), resolve, now, Some(spark))
+    val p = new Parser(Lexer.tokens(kql), resolve, now, Some(spark), localGraph)
     var ok = false
     try {
       val df = p.statements()
@@ -275,15 +279,6 @@ object KqlCompiler {
       if (!ok) p.materializedFrames.foreach(_.unpersist(blocking = false))
     }
   }
-
-  // perf profile hook shared by the BFS/graph lowerings (perf work only)
-  private def prof0[A](tag: String)(body: => A): A =
-    if (sys.props.get("graft.bfs.profile").contains("1")) {
-      val t0 = System.nanoTime()
-      val r = body
-      println(f"BFSPROF $tag%-16s ${(System.nanoTime() - t0) / 1e9}%7.3f s")
-      r
-    } else body
 
   // ------------------------------------------------------------- lexer
 
@@ -352,7 +347,8 @@ object KqlCompiler {
 
   private final class Parser(toks: Vector[Tok], resolve: String => DataFrame,
                              now: java.time.Instant,
-                             sessionHint: Option[org.apache.spark.sql.SparkSession]) {
+                             sessionHint: Option[org.apache.spark.sql.SparkSession],
+                             localGraph: Boolean = true) {
     private var pos = 0
     private val lets = scala.collection.mutable.Map.empty[String, DataFrame]
     // per-compile memo of tabular-`in` operand probes, keyed by frame
@@ -728,14 +724,7 @@ object KqlCompiler {
             }
           } catch { case scala.util.control.NonFatal(_) => None }
       }
-      classified.map { case (aConj, pairConj) => prof0("bfsWhole") {
-        def prof[A](tag: String)(body: => A): A =
-          if (sys.props.get("graft.bfs.profile").contains("1")) {
-            val t0 = System.nanoTime()
-            val r = body
-            println(f"BFSPROF $tag%-16s ${(System.nanoTime() - t0) / 1e9}%7.3f s")
-            r
-          } else body
+      classified.map { case (aConj, pairConj) =>
         def rehost(e: CExpr, m: Map[String, Column]): Column =
           GraftColumnBridge.column(e.transform {
             case a: AttributeReference if m.contains(a.name) =>
@@ -757,24 +746,12 @@ object KqlCompiler {
         // execution (or at the next compile for never-executed plans),
         // never a session-lifetime CacheManager entry (the r16 finding
         // that forced the checkpoint detour).
-        // when the edge source is already cache-backed (a materialize()d
-        // let, query-duration persist) and only narrow ops sit above it,
-        // the loop reads THAT cache directly: a second checkpoint of the
-        // same rows costs one redundant block write+read per execution
-        // for zero recompute saved
-        def cheapOverCached(df: DataFrame): Boolean = cacheBacked(df)
-        // perf-A/B hook (not a user knob): -Dgraft.bfs.cache=checkpoint
-        // restores the r17 lazy-localCheckpoint mode for interleaved
-        // same-JVM comparison against the query-duration persist
-        def loopCache(df: DataFrame): DataFrame =
-          if (sys.props.getOrElse("graft.bfs.cache", "persist") == "checkpoint")
-            df.localCheckpoint(eager = false)
-          else {
-            val c = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            materializedFrames += c
-            c
-          }
-        val edges = prof("edgesBuild") {
+        def loopCache(df: DataFrame): DataFrame = {
+          val c = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          materializedFrames += c
+          c
+        }
+        val edges = {
           val (inC, outC) = if (forward) (g.srcCol, g.dstCol) else (g.dstCol, g.srcCol)
           // __bfs_ekey: a cheap deterministic edge encoding for the
           // output=any tie-break (null-marked field concat, NOT to_json -
@@ -789,9 +766,12 @@ object KqlCompiler {
             concat_ws("\u0001",
               eCols.map(c => coalesce(g.edges(c).cast("string"), lit("\u0002"))): _*)
               .as("__bfs_ekey"))
-          if (cheapOverCached(g.edges) &&
-              !sys.props.get("graft.bfs.forcecache").contains("1")) proj
-          else loopCache(proj)
+          // when the edge source is already cache-backed (a materialize()d
+          // let, query-duration persist) and only narrow ops sit above it,
+          // the loop reads THAT cache directly: a second checkpoint of the
+          // same rows costs one redundant block write+read per execution
+          // for zero recompute saved
+          if (cacheBacked(g.edges)) proj else loopCache(proj)
         }
         // derived nodes (no `with` clause): the node table is NOTHING
         // but the endpoint set, so skip materializing it entirely —
@@ -802,9 +782,9 @@ object KqlCompiler {
         // *1..k paths either way), and the endpoint bind is an identity
         // struct over the reached id (no join). With an explicit `with`
         // node table both sides must consult it: loop-cache it.
-        val nodes = prof("nodesBuild") {
-          if (g.derivedNodes || cheapOverCached(g.nodes)) g.nodes
-          else loopCache(g.nodes) }
+        val nodes =
+          if (g.derivedNodes || cacheBacked(g.nodes)) g.nodes
+          else loopCache(g.nodes)
         // a frontier/settled side known (from the round's count) to be
         // small broadcasts — the single-source BFS never shuffles the
         // full edge table into new partitionings per round
@@ -857,22 +837,21 @@ object KqlCompiler {
         // through to the distributed loop, as does anything past the
         // caps. The result relation is byte-identical to the per-level
         // union (KqlCompilerSpec BFS fixtures + the q146 oracle gate).
-        val edgesSmall = graft.ops.InterpretedLoop.isSmall(g.edges)
         val localReached: Option[(DataFrame, Long)] =
-          if (g.derivedNodes && edgesSmall) {
+          if (g.derivedNodes && localGraph) {
             val (lIn, lOut) = if (forward) (g.srcCol, g.dstCol) else (g.dstCol, g.srcCol)
-            prof("localBfs")(graft.ops.LocalGraph.bfsShortestPaths(
-              g.edges, lIn, lOut, sources, maxHops, mode == "any"))
+            graft.ops.LocalGraph.bfsShortestPaths(
+              g.edges, lIn, lOut, sources, maxHops, mode == "any")
           } else None
         // interpreted-loop scope: every plan inside executes ONCE per
         // compile, so on a small graph janino costs more than it saves
         // (InterpretedLoop scaladoc has the q146 A/B); the final result
         // plan is assembled AFTER the scope and keeps codegen
         lazy val (perLevel, reachedCnt0) = graft.ops.InterpretedLoop.runIfSmall(
-            g.edges.sparkSession, edgesSmall) {
-        val srcCnt = prof("srcCnt")(sources.count()) // materializes the node cache too
+            g.edges.sparkSession, graft.ops.SizeGate.small(g.edges)) {
+        val srcCnt = sources.count() // materializes the node cache too
         val sSide = maybeBcast(sources, srcCnt)
-        var frontier = prof("mark0")(dedupAny(
+        var frontier = dedupAny(
           sSide.join(edges, sSide("__bfs_src") === edges("__bfs_in"))
             .select(sSide("__bfs_src"), sSide("__bfs_a"),
               edges("__bfs_out").as("__bfs_cur"),
@@ -880,32 +859,32 @@ object KqlCompiler {
               array(sSide("__bfs_src").cast("string"),
                     edges("__bfs_out").cast("string"),
                     edges("__bfs_ekey")).as("__bfs_sig")))
-          .localCheckpoint(eager = false)) // the count below materializes it
-        var frontierCnt = prof("level0")(frontier.count())
-        var settled = prof("settled0")(frontier.select(col("__bfs_src"), col("__bfs_cur"))
-          .distinct().localCheckpoint(eager = false))
+          .localCheckpoint(eager = false) // the count below materializes it
+        var frontierCnt = frontier.count()
+        var settled = frontier.select(col("__bfs_src"), col("__bfs_cur"))
+          .distinct().localCheckpoint(eager = false)
         var settledCnt = frontierCnt // upper bound; exact enough for the hint
         val perLevel = scala.collection.mutable.Buffer[DataFrame](frontier)
         var reachedCnt = frontierCnt
         var lvl = 1
         while (lvl < maxHops && frontierCnt > 0) {
           val fSide = maybeBcast(frontier, frontierCnt)
-          val ext = prof(s"ext$lvl")(fSide.join(edges, fSide("__bfs_cur") === edges("__bfs_in"))
+          val ext = fSide.join(edges, fSide("__bfs_cur") === edges("__bfs_in"))
             .select(fSide("__bfs_src"), fSide("__bfs_a"),
               edges("__bfs_out").as("__bfs_cur"),
               concat(fSide("__bfs_path"), array(edges("__bfs_edge"))).as("__bfs_path"),
               concat(fSide("__bfs_sig"),
                 array(fSide("__bfs_cur").cast("string"),
                       edges("__bfs_out").cast("string"),
-                      edges("__bfs_ekey"))).as("__bfs_sig")))
+                      edges("__bfs_ekey"))).as("__bfs_sig"))
           // lazy marks: the per-level count (the loop's one driver probe)
           // materializes the checkpointed frontier in the SAME job — one
           // job launch per level instead of three (round-15 discipline)
-          val fresh = prof(s"mark$lvl")(dedupAny(
+          val fresh = dedupAny(
             ext.join(maybeBcast(settled, settledCnt),
               Seq("__bfs_src", "__bfs_cur"), "left_anti"))
-            .localCheckpoint(eager = false))
-          frontierCnt = prof(s"level$lvl")(fresh.count())
+            .localCheckpoint(eager = false)
+          frontierCnt = fresh.count()
           // settled tracks PAIRS: for output=all the frontier carries one
           // row per shortest path, so dedupe before the union or the
           // settled set (and its broadcast-size estimate) grows with path
@@ -913,7 +892,7 @@ object KqlCompiler {
           val freshPairs =
             if (mode == "any") fresh.select(col("__bfs_src"), col("__bfs_cur"))
             else fresh.select(col("__bfs_src"), col("__bfs_cur")).distinct()
-          settled = prof(s"settled$lvl")(settled.union(freshPairs).localCheckpoint(eager = false))
+          settled = settled.union(freshPairs).localCheckpoint(eager = false)
           settledCnt += (if (mode == "any") frontierCnt else freshPairs.count())
           reachedCnt += frontierCnt
           perLevel += fresh
@@ -934,7 +913,7 @@ object KqlCompiler {
         val (reached, reachedCnt) = localReached match {
           case Some((df, n)) => (df, n)
           case None =>
-            (prof("finalAssembly0")(perLevel.reduce(_ unionByName _)), reachedCnt0)
+            (perLevel.reduce(_ unionByName _), reachedCnt0)
         }
         var out =
           if (g.derivedNodes)
@@ -963,10 +942,10 @@ object KqlCompiler {
            else Map(aAlias -> col("__bfs_a"), bAlias -> col("__bfs_b"))) +
           (eAlias -> col("__bfs_path"))
         val fin = out
-        prof("finalSelect")(withBinds(binds) {
+        withBinds(binds) {
           fin.select(projs.map { case (n, e) => e(fin).as(n) }: _*)
-        })
-      } }
+        }
+      }
     }
 
     /** Element bindings for mv-apply's sub-pipeline: while a lambda body
@@ -3638,21 +3617,16 @@ object KqlCompiler {
               } else more2 = false
             }
             val pairs = g.edges.select(col(g.srcCol), col(g.dstCol))
-            // weak components ride the size-gated driver-local union-
-            // find when the gate admits (LocalGraph — the round-20
-            // q41/q57 pattern generalized to string ids); the star-
-            // contraction fixpoint stays the at-scale path. The strong
-            // variant's gate lives inside StronglyConnected.components.
+            // both kinds ride the size-gated driver-local kernels when
+            // the gate admits (LocalGraph union-find — the q41/q57 call —
+            // and Tarjan); the star-contraction / FW-BW fixpoints stay
+            // the at-scale path.
             val comp =
               if (strong)
-                graft.ops.StronglyConnected.components(pairs)
+                graft.ops.StronglyConnected.components(pairs, localGraph)
                   .select(col("node").as("__gmc_id"), col("comp").as(compCol))
-              else graft.ops.LocalGraph.weakComponents(pairs) match {
-                case Some(local) => local
-                  .select(col("node").as("__gmc_id"), col("comp").as(compCol))
-                case None => graft.queries.LlmQueries.connectedComponents(pairs)
-                  .select(col("doc_id").as("__gmc_id"), col("cluster_rep").as(compCol))
-              }
+              else graft.queries.LlmQueries.connectedComponents(pairs, localGraph)
+                .select(col("doc_id").as("__gmc_id"), col("cluster_rep").as(compCol))
             val marked = g.nodes
               .join(comp, g.nodes(g.idCol) === col("__gmc_id"), "left")
               .withColumn(compCol, coalesce(col(compCol), g.nodes(g.idCol)))
@@ -4008,7 +3982,7 @@ object KqlCompiler {
         val param = params.head
         val sub = new Parser(toks.slice(bStart, bEnd),
           nm => if (nm == param) df else resolveName(nm),
-          now, sessionHint)
+          now, sessionHint, localGraph)
         val out = sub.statements()
         sub.expectEnd()
         out

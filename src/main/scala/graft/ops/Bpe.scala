@@ -165,25 +165,21 @@ object Bpe {
     * §1.2/§5): the merge loop's working set is the Zipf-compressed
     * DISTINCT-WORD table — vocabulary-sized, not corpus-sized — yet the
     * distributed loop paid k sequential Spark jobs (pair-count agg +
-    * argmax fetch per round) plus k lazy checkpoints for it. When
-    * Catalyst's size estimate says the working set is small (same
-    * `InterpretedLoop.isSmall` gate as the loop-codegen scope; the
-    * estimate errs LARGE on unknown stats, so 100 TB corpora keep the
-    * distributed loop) AND a hard row cap confirms it, the word table is
-    * collected ONCE and the k rounds run as plain Scala — identical
-    * counts (per-word sliding pairs weighted by f), identical
-    * (cnt desc, l asc, r asc) argmax tie-break, identical [[mergeOnce]]
+    * argmax fetch per round) plus k lazy checkpoints for it. When the
+    * [[SizeGate]] admits the working set (the same gate as the
+    * loop-codegen scope; it errs LARGE on unknown stats, so 100 TB
+    * corpora keep the distributed loop) AND a hard row cap confirms it,
+    * the word table is collected ONCE and the k rounds run as plain
+    * Scala — identical counts (per-word sliding pairs weighted by f),
+    * identical (cnt desc, l asc, r asc) argmax tie-break, identical [[mergeOnce]]
     * rewrite, identical early stop — so the merge list is bit-identical
     * (BpeSpec pins local == distributed on a fixture; q98/q99/q119/q134/
     * q240 stay DuckDB-oracle hash-gated). */
   def trainFrom(wf: DataFrame, symsOf: String => Seq[String], k: Int): Seq[Merge] = {
-    if (InterpretedLoop.isSmall(wf)) {
-      val rows = wf.limit(MaxDriverWords + 1).collect()
-      if (rows.length <= MaxDriverWords)
-        return trainLocal(
-          rows.map(r => (r.getString(0), r.getLong(1))), symsOf, k)
+    SizeGate.collect(wf, MaxDriverWords) match {
+      case Some(rows) => trainLocal(rows.map(r => (r.getString(0), r.getLong(1))), symsOf, k)
+      case None => trainFromDistributed(wf, symsOf, k)
     }
-    trainFromDistributed(wf, symsOf, k)
   }
 
   /** Driver-local merge loop — the exact distributed semantics on a
@@ -263,7 +259,7 @@ object Bpe {
     // interpreted-loop scope (see InterpretedLoop): each merge round is
     // one head(1) action over the CAPPED word-stats table - tiny data,
     // fresh plan per round, so per-round codegen dominates
-    graft.ops.InterpretedLoop.runIfSmall(spark, graft.ops.InterpretedLoop.isSmall(wf)) {
+    InterpretedLoop.runIfSmall(spark, SizeGate.small(wf)) {
     while (round < k && !done) {
       val top = words
         .flatMap(ws => ws.syms.iterator.sliding(2).withPartial(false)

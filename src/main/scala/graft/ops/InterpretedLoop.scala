@@ -17,7 +17,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * [[runIfSmall]] therefore disables whole-stage codegen around a
   * loop's COMPILE-TIME actions only when the loop's scanned relation is
-  * small (size estimate ≤ `SmallLoopBytes`, ~3M rows) — a 100 TB graph
+  * small (the [[SizeGate]] decision, ~3M rows) — a 100 TB graph
   * keeps codegen, where one compile per executor amortizes over
   * billions of rows. The final result plan is always assembled OUTSIDE
   * the scope, so the query's own execution compiles normally.
@@ -45,15 +45,6 @@ object InterpretedLoop {
       l
     }
 
-  /** ~3M rows at typical edge-row widths. */
-  val SmallLoopBytes: Long = 256L * 1024 * 1024
-
-  /** Catalyst's size estimate for the loop's scanned relation; errs on
-    * the LARGE side (unknown stats default to huge → codegen stays on). */
-  def isSmall(df: DataFrame): Boolean =
-    try df.queryExecution.optimizedPlan.stats.sizeInBytes <= SmallLoopBytes
-    catch { case scala.util.control.NonFatal(_) => false }
-
   def runIfSmall[A](session: SparkSession, small: Boolean)(body: => A): A =
     if (!small) body
     else {
@@ -72,5 +63,5 @@ object InterpretedLoop {
     }
 
   def run[A](df: DataFrame)(body: => A): A =
-    runIfSmall(df.sparkSession, isSmall(df))(body)
+    runIfSmall(df.sparkSession, SizeGate.small(df))(body)
 }

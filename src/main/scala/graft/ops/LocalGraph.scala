@@ -3,10 +3,11 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, ShortType, StringType, StructField, StructType}
 
-/** Size-gated driver-local graph kernels for the KQL
-  * `graph-mark-components` loops (optimization round 21, guide §1.2 —
-  * the round-20 BPE/LPA/CC pattern applied to the remaining iterative
-  * graph operators).
+/** Size-gated driver-local graph kernels: weak components (the q41/q57
+  * dedup clusters and KQL `graph-mark-components`), strong components
+  * and the KQL shortest-path BFS (optimization rounds 20–21, guide
+  * §1.2 — the BPE/LPA pattern applied to the iterative graph
+  * operators).
   *
   * The distributed fixpoints (star contraction for weak components,
   * forward-backward anchor peeling for strong) pay several join+agg
@@ -29,28 +30,15 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, S
   *    id appearing only in null-partnered edges is absent from the
   *    result — callers coalesce missing nodes to their own id.
   *
-  * Gating: the driver-local path runs only when every LEAF relation
-  * under the pair plan is Catalyst-estimated small (summed
-  * `sizeInBytes` ≤ [[InterpretedLoop.SmallLoopBytes]] — errs LARGE on
-  * unknown stats, so a 100 TB graph keeps the distributed loop; leaf
-  * sizes, not the plan root, because a join-built edge list like
-  * q223's carries a product-of-children estimate that is meaninglessly
-  * huge) AND a hard row cap confirms at collect time — `limit(cap+1)`
-  * executes incrementally, so even a mis-estimated exploding join
-  * stops after ~cap rows and falls through to the distributed loop.
-  * `-Dgraft.graph.local=off` is the perf-A/B hook (not a user knob)
-  * forcing the distributed path for interleaved comparison.
+  * Gating: the driver-local path runs only when [[SizeGate.collect]]
+  * admits the pair plan (leaf-size estimate plus the shared
+  * [[SizeGate.MaxDriverRows]] cap); otherwise the caller's distributed
+  * loop runs. Callers that must pin the distributed path (parity specs)
+  * pass `local = false` to their own entry point.
   * LocalGraphSpec pins local == distributed on chains, rings, stars,
   * the q223 hub shape, and a supplementary-plane string-order tie.
   */
 object LocalGraph {
-
-  /** ~2M edges — far above any gated graph's edge set, ~100 MB of
-    * collected rows worst-case at graph-id widths. */
-  val MaxDriverEdges = 2000000
-
-  private def localEnabled: Boolean =
-    !sys.props.get("graft.graph.local").contains("off")
 
   /** Spark's sort/min ordering for a supported id type; None on types
     * the kernels don't replay (those stay distributed). */
@@ -65,42 +53,30 @@ object LocalGraph {
     case _ => None
   }
 
-  /** Sum of Catalyst leaf-relation size estimates — the gate that errs
-    * LARGE (missing stats → huge) without inheriting join-estimation
-    * blowup from the plan interior. */
-  private def leavesSmall(df: DataFrame): Boolean =
-    try {
-      val leaves = df.queryExecution.optimizedPlan.collectLeaves()
-      leaves.nonEmpty &&
-        leaves.map(_.stats.sizeInBytes).sum <= InterpretedLoop.SmallLoopBytes
-    } catch { case scala.util.control.NonFatal(_) => false }
-
   /** Collects the first two columns of `pairs` under the gate; None →
     * stay distributed. */
   private def collectPairs(pairs: DataFrame): Option[(Array[Row], DataType)] = {
-    if (!localEnabled || pairs.schema.length < 2) return None
+    if (pairs.schema.length < 2) return None
     val dt = pairs.schema(0).dataType
-    if (pairs.schema(1).dataType != dt) return None
-    if (orderingFor(dt).isEmpty) return None
-    if (!leavesSmall(pairs)) return None
-    val rows = pairs.limit(MaxDriverEdges + 1).collect()
-    if (rows.length > MaxDriverEdges) None else Some((rows, dt))
+    if (pairs.schema(1).dataType != dt || orderingFor(dt).isEmpty) return None
+    SizeGate.collect(pairs, SizeGate.MaxDriverRows).map((_, dt))
   }
 
-  private def result(spark: SparkSession, dt: DataType,
-                     rows: Seq[(Any, Any)]): DataFrame = {
+  private def result(spark: SparkSession, dt: DataType, rows: Seq[Row],
+                     extra: Seq[StructField] = Nil): DataFrame = {
     val schema = StructType(Seq(
       StructField("node", dt, nullable = true),
-      StructField("comp", dt, nullable = true)))
+      StructField("comp", dt, nullable = true)) ++ extra)
     val list = new java.util.ArrayList[Row](rows.length)
-    rows.foreach { case (n, c) => list.add(Row(n, c)) }
+    rows.foreach(list.add)
     spark.createDataFrame(list, schema)
   }
 
   /** Weak connected components over the first two columns of `pairs`;
-    * Some((node, comp)) covering every endpoint value (incl. null as
-    * its own component) with comp = component-min id, or None when the
-    * gate says stay distributed. */
+    * Some((node, comp, size)) covering every endpoint value (incl. null
+    * as its own component) with comp = component-min id and size = the
+    * component's vertex count, sorted by node in Spark's ASC order
+    * (nulls first), or None when the gate says stay distributed. */
   def weakComponents(pairs: DataFrame): Option[DataFrame] =
     collectPairs(pairs).map { case (rows, dt) =>
       val ord = orderingFor(dt).get
@@ -128,11 +104,23 @@ object LocalGraph {
           }
         }
       }
-      val out = scala.collection.mutable.ArrayBuffer.empty[(Any, Any)]
+      val labeled = scala.collection.mutable.ArrayBuffer.empty[(Any, Any)]
+      val sizes = scala.collection.mutable.HashMap.empty[Any, Long].withDefaultValue(0L)
       verts.forEach { v =>
-        out += ((v, if (v == null || !parent.containsKey(v)) v else find(v)))
+        val c = if (v == null || !parent.containsKey(v)) v else find(v)
+        labeled += ((v, c))
+        sizes(c) += 1
       }
-      result(pairs.sparkSession, dt, out.toSeq)
+      val nullsFirst = new Ordering[Any] {
+        override def compare(a: Any, b: Any): Int =
+          if (a == null) { if (b == null) 0 else -1 }
+          else if (b == null) 1
+          else ord.compare(a, b)
+      }
+      val out = labeled.sortBy(_._1)(nullsFirst)
+        .map { case (v, c) => Row(v, c, sizes(c)) }
+      result(pairs.sparkSession, dt, out.toSeq,
+        Seq(StructField("size", LongType, nullable = false)))
     }
 
   /** Strongly connected components (iterative Tarjan) over the first
@@ -232,7 +220,7 @@ object LocalGraph {
       // comp id = minimum node id of the SCC, in Spark's ordering
       val compMin = sccMembers.map(ms =>
         ms.map(nodes(_)).min(ord)).toArray
-      val out = (0 until n).map(i => (nodes(i), compMin(comp(i))))
+      val out = (0 until n).map(i => Row(nodes(i), compMin(comp(i))))
       result(pairs.sparkSession, dt, out)
     }
 
@@ -292,12 +280,12 @@ object LocalGraph {
     *    caller's endpoint filter).
     *
     * Applies only when the id type's CAST(… AS STRING) is replayed
-    * exactly (string/long/int — the sig elements) ; returns None past
-    * the caps so the distributed loop runs unchanged. */
+    * exactly (string/long/int — the sig elements) ; returns None when
+    * [[SizeGate]] refuses the edges or past the caps, so the distributed
+    * loop runs unchanged. */
   def bfsShortestPaths(rawEdges: DataFrame, inCol: String, outCol: String,
                        sources: DataFrame, maxHops: Int,
                        anyMode: Boolean): Option[(DataFrame, Long)] = {
-    if (!localEnabled) return None
     // every edge column must have an exactly-replayable CAST(… AS
     // STRING) — the per-hop sort key (ekey) and the sig elements are
     // built from those casts in the distributed loop
@@ -309,13 +297,15 @@ object LocalGraph {
     val iIn = rawEdges.schema.fieldIndex(inCol)
     val iOut = rawEdges.schema.fieldIndex(outCol)
     val idType = fields(iIn).dataType
-    val srcRows = sources.limit(200001).collect()
-    if (srcRows.length > 200000) return None
     // ONE collect of the raw edge columns — the struct, endpoint and
     // ekey columns of the distributed projection are all derived from
     // them, so shipping them once is ~3× less driver transfer
-    val edgeRows = rawEdges.limit(MaxDriverEdges + 1).collect()
-    if (edgeRows.length > MaxDriverEdges) return None
+    val edgeRows = SizeGate.collect(rawEdges, SizeGate.MaxDriverRows) match {
+      case Some(rs) => rs
+      case None => return None
+    }
+    val srcRows = sources.limit(200001).collect()
+    if (srcRows.length > 200000) return None
     // ekey: concat_ws(U+0001, coalesce(cast(col as string), U+0002))
     // replayed exactly (supported column types only, checked above)
     val ekeys = new Array[String](edgeRows.length)

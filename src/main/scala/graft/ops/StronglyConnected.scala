@@ -50,16 +50,17 @@ object StronglyConnected {
 
   /** edges: first two columns are (src, dst); any id type with an
     * ordering. Returns (node, comp) covering every edge endpoint —
-    * isolated nodes are the caller's concern (as in the weak variant). */
-  def components(edges: DataFrame): DataFrame = {
+    * isolated nodes are the caller's concern (as in the weak variant).
+    * `local = false` pins the distributed loop. */
+  def components(edges: DataFrame, local: Boolean = true): DataFrame = {
     val Seq(sc, dc) = edges.columns.toSeq.take(2)
     // Size-gated driver-local Tarjan (optimization round 21, guide
     // §1.2): the FW-BW loop below pays ~6 lazy-checkpoint frames + 3
     // count actions per round plus a full label fixpoint — on a gated-
     // scale graph the identical (node, comp = SCC-min id) labeling is
     // one collect + one local pass. Gate and parity notes in LocalGraph.
-    LocalGraph.strongComponents(edges.select(F.col(sc), F.col(dc))) match {
-      case Some(local) => return local
+    if (local) LocalGraph.strongComponents(edges.select(F.col(sc), F.col(dc))) match {
+      case Some(comp) => return comp
       case None => ()
     }
     val e0 = edges.select(F.col(sc).as("src"), F.col(dc).as("dst"))

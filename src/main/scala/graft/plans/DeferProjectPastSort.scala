@@ -61,9 +61,6 @@ object DeferProjectPastSort extends Rule[LogicalPlan] {
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan match {
-    // perf-A/B hook (not a user knob): -Dgraft.defer.sort=off restores
-    // the undeferred shape for interleaved same-JVM comparison
-    case _ if sys.props.get("graft.defer.sort").contains("off") => plan
     case s: Sort => rewrite(s)
     // A write-terminated plan (every bench execution: the noop sink's V2
     // OverwriteByExpression; any AppendData / V1 DataWritingCommand) keeps

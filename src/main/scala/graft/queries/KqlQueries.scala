@@ -921,28 +921,20 @@ object KqlQueries extends QueryModule {
     // 'p'), so the edge set is provably identical to distinct-over-
     // union-of-strcats while the distinct's shuffle carries half the
     // rows at a third of the bytes (guide §2.3: narrower types, project
-    // before the exchange). `-Dgraft.sssp.pairdedup=off` restores the
-    // round-20 text (the interleaved-A/B hook).
+    // before the exchange).
     "q146_kql_text_graph_sssp" -> ((s, dir) =>
       graft.kql.KqlCompiler.compile(
-        ((if (sys.props.get("graft.sssp.pairdedup").contains("off"))
-          """let E = materialize(lineitem
-          |   | project src = strcat('o', tostring(l_orderkey)), dst = strcat('p', tostring(l_partkey))
-          |   | union (lineitem | project src = strcat('p', tostring(l_partkey)), dst = strcat('o', tostring(l_orderkey)))
-          |   | distinct src, dst);
-          | E"""
-        else
-          """let P = materialize(lineitem | distinct l_orderkey, l_partkey);
+        """let P = materialize(lineitem | distinct l_orderkey, l_partkey);
           | let E = P
           |   | project src = strcat('o', tostring(l_orderkey)), dst = strcat('p', tostring(l_partkey))
           |   | union (P | project src = strcat('p', tostring(l_partkey)), dst = strcat('o', tostring(l_orderkey)));
-          | E""") + """
+          | E
           | | make-graph src --> dst
           | | graph-shortest-paths (a)-[e*1..4]->(b)
           |   where a.node_id == 'p1'
           |   project b = b.node_id, hops = array_length(e)
           | | summarize n = count() by hops
-          | | order by hops asc""").stripMargin,
+          | | order by hops asc""".stripMargin,
         (n: String) => n match {
           case "lineitem" => Tables.lineitem(s, dir)
           case other => throw new IllegalArgumentException(other)

@@ -41,31 +41,8 @@ private[queries] trait LlmDedupQueries extends LlmShared {
     * pair DISTINCT over (id, mh) pairs is 1:1 with the old id-only
     * DISTINCT and est_jaccard per pair is unchanged. The band rows
     * widen by ~100 B against a kernel pass saved per removed join; the
-    * band fan-in is BandCap-bounded at any scale.
-    * `-Dgraft.lsh.mh=join` restores the join shape (A/B hook). */
-  private[graft] def minhashSql(bandCap: Int = BandCap): String = {
-    val carry = !sys.props.get("graft.lsh.mh").contains("join")
-    val candEst =
-      if (carry) s"""
-    cand AS (
-      SELECT DISTINCT a.doc_id AS id_a, a.mh AS mh_a, b.doc_id AS id_b, b.mh AS mh_b
-      FROM bandsc a JOIN bandsc b ON a.b = b.b AND a.bh = b.bh AND a.doc_id < b.doc_id
-      WHERE a.bsz <= $bandCap),
-    est AS (
-      SELECT id_a, id_b,
-             size(filter(sequence(0, 11), k -> element_at(mh_a, k+1) = element_at(mh_b, k+1))) / cast(12 AS double) AS est_jaccard
-      FROM cand)"""
-      else s"""
-    cand AS (
-      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM bandsc a JOIN bandsc b ON a.b = b.b AND a.bh = b.bh AND a.doc_id < b.doc_id
-      WHERE a.bsz <= $bandCap),
-    est AS (
-      SELECT id_a, id_b,
-             size(filter(sequence(0, 11), k -> element_at(sa.mh, k+1) = element_at(sb.mh, k+1))) / cast(12 AS double) AS est_jaccard
-      FROM cand JOIN sig sa ON cand.id_a = sa.doc_id JOIN sig sb ON cand.id_b = sb.doc_id)"""
-    val mhCol = if (carry) ", mh" else ""
-    s"""
+    * band fan-in is BandCap-bounded at any scale. */
+  private[graft] def minhashSql(bandCap: Int = BandCap): String = s"""
     WITH sig AS (
       -- minhash_sig is a native codegen'd Expression (graft.functions
       -- .MinhashSignature): shingling + md5 + the 12 min-lanes run as one
@@ -77,14 +54,21 @@ private[queries] trait LlmDedupQueries extends LlmShared {
       SELECT doc_id, minhash_sig(text) AS mh
       FROM documents WHERE size(split(lower(text), '\\\\s+')) >= 3),
     bands AS (
-      SELECT doc_id$mhCol, b,
+      SELECT doc_id, mh, b,
              md5(concat_ws(',', cast(element_at(mh, b*3+1) AS string), cast(element_at(mh, b*3+2) AS string), cast(element_at(mh, b*3+3) AS string))) AS bh
       FROM sig LATERAL VIEW explode(sequence(0, 3)) bt AS b),
     bandsc AS (
       -- bucket-size window shares the (b, bh) shuffle the self-join needs
-      SELECT doc_id$mhCol, b, bh, count(1) OVER (PARTITION BY b, bh) AS bsz FROM bands),$candEst
+      SELECT doc_id, mh, b, bh, count(1) OVER (PARTITION BY b, bh) AS bsz FROM bands),
+    cand AS (
+      SELECT DISTINCT a.doc_id AS id_a, a.mh AS mh_a, b.doc_id AS id_b, b.mh AS mh_b
+      FROM bandsc a JOIN bandsc b ON a.b = b.b AND a.bh = b.bh AND a.doc_id < b.doc_id
+      WHERE a.bsz <= $bandCap),
+    est AS (
+      SELECT id_a, id_b,
+             size(filter(sequence(0, 11), k -> element_at(mh_a, k+1) = element_at(mh_b, k+1))) / cast(12 AS double) AS est_jaccard
+      FROM cand)
     SELECT id_a, id_b, est_jaccard FROM est WHERE est_jaccard >= 0.5 ORDER BY id_a, id_b"""
-  }
 
   /** The q22 oracle's CTE list up through `est` — shared with the q41
     * cluster oracle, which extends it with a recursive reachability CTE. */
@@ -152,8 +136,7 @@ private[queries] trait LlmDedupQueries extends LlmShared {
     * COUNT/CHECKSUM per round, no row data ever reaches the driver. */
   private[queries] def dupClusters(s: SparkSession, dir: String): DataFrame = {
     val s2 = docs(s, dir)
-    connectedComponents(s2.sql(minhashSql()).select(col("id_a"), col("id_b")),
-      allowLocal = graft.ops.InterpretedLoop.isSmall(s2.table("documents")))
+    connectedComponents(s2.sql(minhashSql()).select(col("id_a"), col("id_b")))
   }
 
   /** The dedup MATERIALIZER — what a corpus pipeline actually runs after
@@ -169,8 +152,7 @@ private[queries] trait LlmDedupQueries extends LlmShared {
     * rate. Everything upstream is the q22+q41 machinery unchanged. */
   private[queries] def dedupKeep(s: SparkSession, dir: String): DataFrame = {
     val s2 = docs(s, dir)
-    val clusters = connectedComponents(s2.sql(minhashSql()).select(col("id_a"), col("id_b")),
-      allowLocal = graft.ops.InterpretedLoop.isSmall(s2.table("documents")))
+    val clusters = connectedComponents(s2.sql(minhashSql()).select(col("id_a"), col("id_b")))
     val drop = clusters.filter(col("doc_id") =!= col("cluster_rep")).select("doc_id")
     s2.table("documents").join(drop, Seq("doc_id"), "left_anti")
       .select(col("doc_id"), col("source"), col("lang"))
@@ -224,53 +206,12 @@ private[queries] trait LlmDedupQueries extends LlmShared {
 
   /** Connected components over an undirected pair list (`id_a`, `id_b`)
     * → (`doc_id`, `cluster_rep`, `cluster_size`), rep = component
-    * minimum. Exposed for direct testing on pathological graph shapes
-    * (chains, rings) independent of the LSH pair source. */
+    * minimum, sorted by doc_id. Exposed for direct testing on
+    * pathological graph shapes (chains, rings) independent of the LSH
+    * pair source; `local = false` pins the distributed loop. */
   private[graft] def connectedComponents(pairs: DataFrame,
-                                         allowLocal: Boolean = false): DataFrame =
-    connectedComponentsWithRounds(pairs, allowLocal)._1
-
-  /** Driver-local pair cap for the size-gated CC fast path (~32 MB of
-    * longs at the cap — far above any gated corpus's pair set). */
-  private[queries] val MaxDriverPairs = 2000000
-
-  /** Driver-local connected components: union-find with min-id
-    * representatives — bit-identical to the star-contraction fixpoint
-    * (both compute min-reachability on INTEGER ids; no float order
-    * anywhere). One pass over the collected pairs, O(E α(V)). */
-  private[queries] def componentsLocal(spark: SparkSession,
-                                       pairs: Array[(Long, Long)]): DataFrame = {
-    val parent = new java.util.HashMap[Long, Long]()
-    def find(x: Long): Long = {
-      var r = x
-      while (parent.getOrDefault(r, r) != r) r = parent.getOrDefault(r, r)
-      var c = x
-      while (parent.getOrDefault(c, c) != r) { val n = parent.getOrDefault(c, c); parent.put(c, r); c = n }
-      r
-    }
-    pairs.foreach { case (a, b) =>
-      parent.putIfAbsent(a, a); parent.putIfAbsent(b, b)
-      val ra = find(a); val rb = find(b)
-      if (ra != rb) { if (ra < rb) parent.put(rb, ra) else parent.put(ra, rb) }
-    }
-    // union-by-min already keeps the root the minimum id of its tree,
-    // since every union links the larger root under the smaller one
-    val repOf = new java.util.HashMap[Long, Long]()
-    val sizeOf = new java.util.HashMap[Long, Long]()
-    val ids = new Array[Long](parent.size)
-    var i = 0
-    val it = parent.keySet().iterator()
-    while (it.hasNext) { ids(i) = it.next(); i += 1 }
-    ids.foreach { id =>
-      val r = find(id)
-      repOf.put(id, r)
-      sizeOf.merge(r, 1L, (a, b) => a + b)
-    }
-    import spark.implicits._
-    ids.toIndexedSeq.sorted
-      .map(id => (id, repOf.get(id), sizeOf.get(repOf.get(id)).longValue()))
-      .toDF("doc_id", "cluster_rep", "cluster_size")
-  }
+                                         local: Boolean = true): DataFrame =
+    connectedComponentsWithRounds(pairs, local)._1
 
   /** Alternating large-star/small-star contraction to a star-forest
     * fixpoint: every non-root node ends up with a single edge to its
@@ -288,23 +229,20 @@ private[queries] trait LlmDedupQueries extends LlmShared {
     * ANSI mode, order-independent, and the edge set is distinct so no
     * duplicate cancellation can occur). */
   private[graft] def connectedComponentsWithRounds(pairs: DataFrame,
-                                                   allowLocal: Boolean = false): (DataFrame, Int) = {
+                                                   local: Boolean = true): (DataFrame, Int) = {
     // Size-gated driver-local fast path (optimization round 20, guide
     // §1.2): dedup pair sets are CLUSTER-sized (bounded by bandCap and
     // the corpus's duplicate rate), yet the star-contraction fixpoint
-    // pays 2 jobs + a checksum action per round for them. Callers that
-    // can see the corpus is small (the documents_rp/BPE isSmall gate)
-    // pass allowLocal; a hard row cap confirms before anything is
-    // collected, so a mis-estimated giant pair set falls through to the
-    // distributed loop. Union-find on integer ids is EXACTLY min-
-    // reachability — no float order anywhere — and the parity is pinned
-    // in ConnectedComponentsSpec (local == distributed on chains/rings/
-    // stars), with q41/q57 staying DuckDB-oracle hash-gated.
-    if (allowLocal) {
-      val rows = pairs.limit(MaxDriverPairs + 1).collect()
-      if (rows.length <= MaxDriverPairs)
-        return (componentsLocal(pairs.sparkSession,
-          rows.map(r => (r.getLong(0), r.getLong(1)))), 0)
+    // pays 2 jobs + a checksum action per round for them. When the
+    // SizeGate admits the pair plan and its row cap holds, one
+    // union-find pass (LocalGraph.weakComponents) labels every vertex
+    // with its component minimum and size — EXACTLY min-reachability, no
+    // float order anywhere. Parity is pinned in ConnectedComponentsSpec
+    // and LocalGraphSpec (local == distributed on chains/rings/stars),
+    // with q41/q57 staying DuckDB-oracle hash-gated.
+    if (local) graft.ops.LocalGraph.weakComponents(pairs) match {
+      case Some(comp) => return (comp.toDF("doc_id", "cluster_rep", "cluster_size"), 0)
+      case None => ()
     }
     // checkpoint the pair SOURCE once: both the edge canonicalization
     // (materialized by the first checksum) and the vertex set (first
@@ -324,7 +262,6 @@ private[queries] trait LlmDedupQueries extends LlmShared {
     var edges = p0.toDF("src", "dst")
       .select(greatest(col("src"), col("dst")).as("src"), least(col("src"), col("dst")).as("dst"))
       .where(col("src") =!= col("dst")).distinct().localCheckpoint(eager = false)
-    val ccDebug = sys.env.contains("GRAFT_CC_DEBUG") || sys.props.contains("graft.cc.debug")
     var sig = checksum(edges)
     var rounds = 0
     var converged = sig._1 == 0L
@@ -333,12 +270,9 @@ private[queries] trait LlmDedupQueries extends LlmShared {
     // so codegen pays for itself (r18 A/B: interpreted rounds cost q41
     // +0.3 s)
     while (!converged) {
-      val t0 = System.nanoTime()
       val next = smallStar(largeStar(edges)).localCheckpoint(eager = false)
       rounds += 1
       val nextSig = checksum(next)
-      if (ccDebug) System.err.println(
-        f"[cc] round $rounds: ${(System.nanoTime() - t0) / 1e6}%.0f ms, edges=${nextSig._1}")
       converged = nextSig == sig
       sig = nextSig
       edges = next
@@ -396,12 +330,14 @@ private[queries] trait LlmDedupQueries extends LlmShared {
     * separate `n` CTE re-ran the word_shingle_hashes kernel pass over
     * the corpus (Spark inlines every CTE reference) and joined it back
     * twice. Posting entries widen by 8 B against a kernel pass saved;
-    * the posting fan-in is df-capped at any scale.
-    * `-Dgraft.jaccard.cnt=join` restores the join shape (A/B hook). */
-  private[graft] def ngramJaccardSql(dfCap: Int = DocFreqCap): String = {
-    val carry = !sys.props.get("graft.jaccard.cnt").contains("join")
-    val body =
-      if (carry) s"""
+    * the posting fan-in is df-capped at any scale. */
+  private[graft] def ngramJaccardSql(dfCap: Int = DocFreqCap): String = s"""
+    WITH sh AS (
+      -- word_shingle_hashes (native Expression): tokenize + shingle +
+      -- xxhash64 in one codegen'd loop per row; only 8-byte hashes are
+      -- exploded and shuffled, never shingle strings.
+      SELECT doc_id, word_shingle_hashes(text, 3) AS shs
+      FROM documents WHERE size(split(lower(text), '\\\\s+')) >= 3),
     ds AS (SELECT doc_id, cast(size(shs) AS bigint) AS cnt, sid
            FROM sh LATERAL VIEW explode(shs) st AS sid),
     posting AS (
@@ -419,32 +355,6 @@ private[queries] trait LlmDedupQueries extends LlmShared {
     FROM common
     WHERE cast(cm AS double) / (cnt_a + cnt_b - cm) >= 0.4
     ORDER BY id_a, id_b"""
-      else s"""
-    n AS (SELECT doc_id, cast(size(shs) AS bigint) AS cnt FROM sh),
-    ds AS (SELECT doc_id, sid FROM sh LATERAL VIEW explode(shs) st AS sid),
-    posting AS (
-      SELECT sid, collect_list(doc_id) AS ids FROM ds GROUP BY sid
-      HAVING count(1) BETWEEN 2 AND $dfCap),
-    common AS (
-      SELECT id_a, id_b, count(1) AS cm
-      FROM (SELECT a AS id_a, b AS id_b
-            FROM posting
-            LATERAL VIEW explode(ids) ta AS a
-            LATERAL VIEW explode(ids) tb AS b) p
-      WHERE id_a < id_b
-      GROUP BY id_a, id_b)
-    SELECT id_a, id_b, cast(cm AS double) / (na.cnt + nb.cnt - cm) AS jaccard
-    FROM common JOIN n na ON id_a = na.doc_id JOIN n nb ON id_b = nb.doc_id
-    WHERE cast(cm AS double) / (na.cnt + nb.cnt - cm) >= 0.4
-    ORDER BY id_a, id_b"""
-    s"""
-    WITH sh AS (
-      -- word_shingle_hashes (native Expression): tokenize + shingle +
-      -- xxhash64 in one codegen'd loop per row; only 8-byte hashes are
-      -- exploded and shuffled, never shingle strings.
-      SELECT doc_id, word_shingle_hashes(text, 3) AS shs
-      FROM documents WHERE size(split(lower(text), '\\\\s+')) >= 3),$body"""
-  }
 
   private[graft] def ngramJaccardOracle(dfCap: Int = DocFreqCap) = s"""
     WITH toks AS (SELECT doc_id, regexp_split_to_array(lower(text), '\\s+') AS t FROM documents),
@@ -539,25 +449,21 @@ private[queries] trait LlmDedupQueries extends LlmShared {
     * scale-sane passes instead. */
   /** The truth side's document sizes and the candidate side's signatures
     * are each needed at two+ places; Spark inlines every CTE reference,
-    * so each extra reference re-runs the kernel pass (word_shingle_hashes
-    * / minhash_sig over the corpus). Round 21 measures two alternative
-    * shapes per side, interleaved-A/B-selectable via system properties
-    * (`graft.audit.shingle`, `graft.audit.mh` — value `join` restores the
-    * round-20 shape):
-    *  - shingle side `carry`: size(shs) rides the explode into the
-    *    posting lists as a struct field and comes back out of the pair
-    *    group-by via max() (cnt is functionally dependent on doc_id, so
-    *    max = the value) — the separate `n` CTE (a second kernel pass)
-    *    and its two joins disappear;
-    *  - minhash side `carry`: the 12-lane mh array rides the band
-    *    explode, the bucket-count window and the band join, and the
-    *    DISTINCT dedupes (id, mh) pairs (mh functionally dependent on
-    *    doc_id) — two of the three sig kernel passes disappear. */
-  private[queries] def dedupAuditSql: String = {
-    val shingleCarry = !sys.props.get("graft.audit.shingle").contains("join")
-    val mhCarry = !sys.props.get("graft.audit.mh").contains("join")
-    val truthSide =
-      if (shingleCarry) s"""
+    * so each extra reference would re-run the kernel pass
+    * (word_shingle_hashes / minhash_sig over the corpus). Round 21 carries
+    * them instead:
+    *  - shingle side: size(shs) rides the explode into the posting lists
+    *    as a struct field and comes back out of the pair group-by via
+    *    max() (cnt is functionally dependent on doc_id, so max = the
+    *    value) — no separate `n` CTE (a second kernel pass) and no joins
+    *    back to it;
+    *  - minhash side: the 12-lane mh array rides the band explode, the
+    *    bucket-count window and the band join, and the DISTINCT dedupes
+    *    (id, mh) pairs (mh functionally dependent on doc_id) — one sig
+    *    kernel pass instead of three. */
+  private[queries] lazy val dedupAuditSql: String = s"""
+    WITH sh AS (SELECT doc_id, word_shingle_hashes(text, 3) AS shs
+           FROM documents_rp WHERE size(split(lower(text), '\\\\s+')) >= 3),
     ds AS (SELECT doc_id, cast(size(shs) AS bigint) AS cnt, sid
            FROM sh LATERAL VIEW explode(shs) st AS sid),
     posting AS (SELECT sid, collect_list(struct(doc_id, cnt)) AS ids FROM ds GROUP BY sid
@@ -569,22 +475,10 @@ private[queries] trait LlmDedupQueries extends LlmShared {
       WHERE id_a < id_b GROUP BY id_a, id_b),
     exact AS (
       SELECT id_a, id_b, cast(cm AS double) / (cnt_a + cnt_b - cm) AS jaccard
-      FROM common),"""
-      else s"""
-    n AS (SELECT doc_id, cast(size(shs) AS bigint) AS cnt FROM sh),
-    ds AS (SELECT doc_id, sid FROM sh LATERAL VIEW explode(shs) st AS sid),
-    posting AS (SELECT sid, collect_list(doc_id) AS ids FROM ds GROUP BY sid
-                HAVING count(1) BETWEEN 2 AND $DocFreqCap),
-    common AS (
-      SELECT id_a, id_b, count(1) AS cm
-      FROM (SELECT a AS id_a, b AS id_b FROM posting
-            LATERAL VIEW explode(ids) ta AS a LATERAL VIEW explode(ids) tb AS b) p
-      WHERE id_a < id_b GROUP BY id_a, id_b),
-    exact AS (
-      SELECT id_a, id_b, cast(cm AS double) / (na.cnt + nb.cnt - cm) AS jaccard
-      FROM common JOIN n na ON id_a = na.doc_id JOIN n nb ON id_b = nb.doc_id),"""
-    val candSide =
-      if (mhCarry) s"""
+      FROM common),
+    truth AS (SELECT id_a, id_b FROM exact WHERE jaccard >= 0.5),
+    sig AS (SELECT doc_id, minhash_sig(text) AS mh
+            FROM documents_rp WHERE size(split(lower(text), '\\\\s+')) >= 3),
     bands AS (
       SELECT doc_id, mh, b,
              md5(concat_ws(',', cast(element_at(mh, b*3+1) AS string),
@@ -600,36 +494,15 @@ private[queries] trait LlmDedupQueries extends LlmShared {
     cand AS (
       SELECT id_a, id_b FROM cand0
       WHERE size(filter(sequence(0, 11), k -> element_at(mh_a, k+1) = element_at(mh_b, k+1)))
-              / cast(12 AS double) >= 0.5),"""
-      else s"""
-    bands AS (
-      SELECT doc_id, b,
-             md5(concat_ws(',', cast(element_at(mh, b*3+1) AS string),
-                 cast(element_at(mh, b*3+2) AS string),
-                 cast(element_at(mh, b*3+3) AS string))) AS bh
-      FROM sig LATERAL VIEW explode(sequence(0, 3)) bt AS b),
-    bandsc AS (
-      SELECT doc_id, b, bh, count(1) OVER (PARTITION BY b, bh) AS bsz FROM bands),
-    cand0 AS (
-      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM bandsc a JOIN bandsc b ON a.b = b.b AND a.bh = b.bh AND a.doc_id < b.doc_id
-      WHERE a.bsz <= $BandCap),
-    cand AS (
-      SELECT c.id_a, c.id_b
-      FROM cand0 c JOIN sig sa ON c.id_a = sa.doc_id JOIN sig sb ON c.id_b = sb.doc_id
-      WHERE size(filter(sequence(0, 11), k -> element_at(sa.mh, k+1) = element_at(sb.mh, k+1)))
-              / cast(12 AS double) >= 0.5),"""
-    s"""
-    WITH sh AS (SELECT doc_id, word_shingle_hashes(text, 3) AS shs
-           FROM documents_rp WHERE size(split(lower(text), '\\\\s+')) >= 3),$truthSide
-    truth AS (SELECT id_a, id_b FROM exact WHERE jaccard >= 0.5),
-    sig AS (SELECT doc_id, minhash_sig(text) AS mh
-            FROM documents_rp WHERE size(split(lower(text), '\\\\s+')) >= 3),$candSide
+              / cast(12 AS double) >= 0.5),
     j AS (
       -- both pair sets are unique per (id_a, id_b) (cand via DISTINCT,
       -- truth via the pair group-by), so ONE full outer join yields all
       -- three counts in a single pass — the old three scalar subqueries
-      -- re-ran the cand subtree twice and the truth subtree twice
+      -- re-ran the cand subtree twice and the truth subtree twice. The
+      -- IS NOT NULL membership tests are exact: `a.doc_id < b.doc_id`
+      -- (cand) and `id_a < id_b` (truth) already drop null ids from
+      -- both sides, so a null key only marks the missing side
       SELECT (c.id_a IS NOT NULL) AS in_c, (t.id_a IS NOT NULL) AS in_t
       FROM cand c FULL JOIN truth t ON c.id_a = t.id_a AND c.id_b = t.id_b),
     cnts AS (SELECT coalesce(sum(CASE WHEN in_t THEN 1 ELSE 0 END), cast(0 AS bigint)) AS n_truth,
@@ -640,7 +513,6 @@ private[queries] trait LlmDedupQueries extends LlmShared {
            round(CASE WHEN n_cand = 0 THEN 1.0 ELSE cast(n_hit AS double) / n_cand END, 6) AS precision_,
            round(CASE WHEN n_truth = 0 THEN 1.0 ELSE cast(n_hit AS double) / n_truth END, 6) AS recall_
     FROM cnts"""
-  }
 
   private[queries] lazy val dedupAuditOracle = s"""
     WITH toks AS (SELECT doc_id, regexp_split_to_array(lower(text), '\\s+') AS t FROM documents),
@@ -707,13 +579,17 @@ private[queries] trait LlmDedupQueries extends LlmShared {
   /** Round 21: same mh-carry as [[minhashSql]] — the two `sig` joins
     * that re-attached signatures to new×old candidates each re-ran the
     * minhash_sig kernel pass; the arrays now ride the band join and the
-    * pair DISTINCT ((id, mh) is 1:1 with id). `-Dgraft.lsh.mh=join`
-    * restores the join shape (shared A/B hook). */
-  private[queries] def incrementalDedupSql: String = {
-    val carry = !sys.props.get("graft.lsh.mh").contains("join")
-    val mhCol = if (carry) ", mh" else ""
-    val candNear =
-      if (carry) s"""
+    * pair DISTINCT ((id, mh) is 1:1 with id). */
+  private[queries] lazy val incrementalDedupSql: String = s"""
+    WITH sig AS (
+      SELECT doc_id, minhash_sig(text) AS mh
+      FROM documents WHERE size(split(lower(text), '\\\\s+')) >= 3),
+    bands AS (
+      SELECT doc_id, mh, b,
+             md5(concat_ws(',', cast(element_at(mh, b*3+1) AS string), cast(element_at(mh, b*3+2) AS string), cast(element_at(mh, b*3+3) AS string))) AS bh
+      FROM sig LATERAL VIEW explode(sequence(0, 3)) bt AS b),
+    bandsc AS (
+      SELECT doc_id, mh, b, bh, count(1) OVER (PARTITION BY b, bh) AS bsz FROM bands),
     cand AS (
       SELECT DISTINCT n.doc_id AS new_id, n.mh AS mh_n, o.doc_id AS old_id, o.mh AS mh_o
       FROM bandsc n JOIN bandsc o ON n.b = o.b AND n.bh = o.bh
@@ -723,28 +599,7 @@ private[queries] trait LlmDedupQueries extends LlmShared {
         SELECT new_id,
                size(filter(sequence(0, 11), k -> element_at(mh_n, k+1) = element_at(mh_o, k+1))) / cast(12 AS double) AS ej
         FROM cand)
-      WHERE ej >= 0.5),"""
-      else s"""
-    cand AS (
-      SELECT DISTINCT n.doc_id AS new_id, o.doc_id AS old_id
-      FROM bandsc n JOIN bandsc o ON n.b = o.b AND n.bh = o.bh
-      WHERE n.doc_id % 3 = 0 AND o.doc_id % 3 != 0 AND n.bsz <= $BandCap),
-    near0 AS (
-      SELECT DISTINCT new_id FROM (
-        SELECT cand.new_id,
-               size(filter(sequence(0, 11), k -> element_at(sa.mh, k+1) = element_at(sb.mh, k+1))) / cast(12 AS double) AS ej
-        FROM cand JOIN sig sa ON cand.new_id = sa.doc_id JOIN sig sb ON cand.old_id = sb.doc_id)
-      WHERE ej >= 0.5),"""
-    s"""
-    WITH sig AS (
-      SELECT doc_id, minhash_sig(text) AS mh
-      FROM documents WHERE size(split(lower(text), '\\\\s+')) >= 3),
-    bands AS (
-      SELECT doc_id$mhCol, b,
-             md5(concat_ws(',', cast(element_at(mh, b*3+1) AS string), cast(element_at(mh, b*3+2) AS string), cast(element_at(mh, b*3+3) AS string))) AS bh
-      FROM sig LATERAL VIEW explode(sequence(0, 3)) bt AS b),
-    bandsc AS (
-      SELECT doc_id$mhCol, b, bh, count(1) OVER (PARTITION BY b, bh) AS bsz FROM bands),$candNear
+      WHERE ej >= 0.5),
     hashes AS (SELECT doc_id, source, md5(lower(text)) AS h FROM documents),
     exact0 AS (
       SELECT DISTINCT n.doc_id AS new_id
@@ -760,7 +615,6 @@ private[queries] trait LlmDedupQueries extends LlmShared {
     LEFT JOIN exact0 e ON e.new_id = d.doc_id
     LEFT JOIN near0 nr ON nr.new_id = d.doc_id
     GROUP BY source ORDER BY source"""
-  }
 
   private[queries] def incrementalDedupOracle: String = s"""
     WITH toks AS (

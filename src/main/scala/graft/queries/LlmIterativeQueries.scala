@@ -447,22 +447,19 @@ private[queries] trait LlmIterativeQueries extends LlmShared {
     // float order anywhere), so a driver-local 3-round propagation over
     // the collected distinct edge list is bit-identical to the
     // distributed loop, which pays per-round join+agg jobs the
-    // bipartite graph doesn't need at gated scale. The isSmall estimate
-    // errs LARGE on unknown stats (100 TB keeps the distributed loop)
-    // and a hard row cap confirms before anything is collected.
+    // bipartite graph doesn't need at gated scale. The SizeGate errs
+    // LARGE on unknown stats (100 TB keeps the distributed loop) and its
+    // row cap confirms before anything is collected.
     // LabelPropagationParitySpec pins local == distributed on sf0.001;
     // q199 stays DuckDB-oracle hash-gated.
-    if (graft.ops.InterpretedLoop.isSmall(Tables.lineitem(s, dir))) {
-      val pairRows = Tables.lineitem(s, dir)
-        .select((col("l_orderkey") * 2).as("src"), (col("l_partkey") * 2 + 1).as("dst"))
-        .distinct().limit(LpaMaxDriverPairs + 1).collect()
-      if (pairRows.length <= LpaMaxDriverPairs)
-        return lpaLocal(s, pairRows.map(r => (r.getLong(0), r.getLong(1))))
+    val pairs = Tables.lineitem(s, dir)
+      .select((col("l_orderkey") * 2).as("src"), (col("l_partkey") * 2 + 1).as("dst"))
+      .distinct()
+    graft.ops.SizeGate.collect(pairs, graft.ops.SizeGate.MaxDriverRows) match {
+      case Some(rows) => lpaLocal(s, rows.map(r => (r.getLong(0), r.getLong(1))))
+      case None => labelPropDistributed(s, dir)
     }
-    labelPropDistributed(s, dir)
   }
-
-  private[queries] val LpaMaxDriverPairs = 2000000
 
   /** Driver-local LPA — the exact distributed semantics on the collected
     * distinct (order, part) edge list: seeds clamp, messages count each
@@ -722,11 +719,9 @@ private[queries] trait LlmIterativeQueries extends LlmShared {
     // corpus gets AQE-coalesced straight back to one partition (measured:
     // the md5 stage re-serialized behind a 1-task shuffle read), while an
     // explicit N is user-pinned and AQE leaves it alone
-    // perf-A/B hook (not a user knob): -Dgraft.cls.repart=off restores
-    // the one-split scan for interleaved same-JVM comparison
+    val small = graft.ops.SizeGate.small(s.table("documents"))
     val tokSrc =
-      if (!sys.props.get("graft.cls.repart").contains("off") &&
-          graft.ops.InterpretedLoop.isSmall(s.table("documents")))
+      if (small)
         s"(SELECT /*+ REPARTITION(${s.sparkContext.defaultParallelism}, doc_id) */ doc_id, lang, text FROM documents)"
       else "documents"
     val fx = s.sql(s"""
@@ -754,8 +749,7 @@ private[queries] trait LlmIterativeQueries extends LlmShared {
       // interpreted-loop scope (see InterpretedLoop): one collect per
       // round, each round's plan compiled once; gated on the documents
       // input so cluster-scale corpora keep codegen
-      graft.ops.InterpretedLoop.runIfSmall(
-          s, graft.ops.InterpretedLoop.isSmall(s.table("documents"))) {
+      graft.ops.InterpretedLoop.runIfSmall(s, small) {
       for (_ <- 1 to ClsRounds) {
         val wArr = array(w.map(lit).toIndexedSeq: _*)
         val err = fx.groupBy(col("doc_id"))

@@ -98,10 +98,9 @@ object LlmQueries extends QueryModule
 
   override val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q21_exact_dedup" -> (exactDedup(_, _)),
-    // per-call SQL text: the carry/join variant props are A/B hooks
-    "q22_minhash_lsh" -> ((s, dir) => docs(s, dir).sql(minhashSql())),
+    "q22_minhash_lsh" -> sqlQuery(docs, minhashSql()),
     "q23_simhash" -> sqlQuery(docs, simhashSql),
-    "q24_ngram_jaccard" -> ((s, dir) => docs(s, dir).sql(ngramJaccardSql())),
+    "q24_ngram_jaccard" -> sqlQuery(docs, ngramJaccardSql()),
     "q25_knn_bruteforce" -> sqlQuery(embs, knnSql),
     "q26_knn_lsh" -> sqlQuery(embs, lshKnnSql),
     "q27_token_stats" -> sqlQuery(docs, tokenStatsSql),
@@ -155,9 +154,7 @@ object LlmQueries extends QueryModule
     "q155_tfidf_keywords" -> sqlQuery(docs, tfidfSql),
     "q159_pq_ann" -> sqlQuery(embs, pqAnnSql),
     "q161_ppx_buckets" -> sqlQuery(docs, ppxBucketSql),
-    // re-reads dedupAuditSql per call: the variant props are the
-    // interleaved-A/B hook for the round-21 single-pass restructure
-    "q164_dedup_audit" -> ((s, dir) => docsRp(s, dir).sql(dedupAuditSql)),
+    "q164_dedup_audit" -> sqlQuery(docsRp, dedupAuditSql),
     "q168_eval_sampler" -> sqlQuery(docs, evalSamplerSql),
     "q169_emb_outliers" -> sqlQuery(embs, embOutlierSql),
     "q176_bloom_decontam" -> (bloomDecontam(_, _)),
@@ -173,7 +170,7 @@ object LlmQueries extends QueryModule
     "q200_pipeline_funnel" -> sqlQuery(docs, pipelineFunnelSql),
     "q205_html_extract" -> sqlQuery(docs, htmlExtractSql),
     "q211_url_canon" -> sqlQuery(docs, urlCanonSql),
-    "q202_incremental_dedup" -> ((s, dir) => docs(s, dir).sql(incrementalDedupSql)),
+    "q202_incremental_dedup" -> sqlQuery(docs, incrementalDedupSql),
     "q247_unigram_vocab" -> (unigramVocabQuery(_, _)),
     "q248_unigram_segment" -> (unigramSegmentQuery(_, _)))
 

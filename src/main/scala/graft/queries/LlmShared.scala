@@ -39,8 +39,10 @@ private[queries] trait LlmShared {
     // under size-first. Bytes do not predict CPU here; the default's
     // parallelism floor does the right thing. This also keeps the
     // float-state loops' partitioning (q111/q144/q64/q65) byte-
-    // identical to prior rounds. The marker conf is read by
-    // Tables.apply, which runs AFTER this in the view builders.
+    // identical to prior rounds. The conf is set here explicitly, so the
+    // result does not depend on whether Tables.apply ran first; the
+    // marker keeps later Tables.apply calls from flipping it back.
+    s.conf.set("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
     s.conf.set("spark.graft.aqe.keepParallelismFirst", "true")
   }
 
@@ -67,8 +69,14 @@ private[queries] trait LlmShared {
     * raw text that keeps the kernel map-parallel either way. */
   private[queries] def docsRp(s: SparkSession, dir: String): SparkSession = {
     val s2 = docs(s, dir)
+    withDocsRp(s2, graft.ops.SizeGate.small(s2.table("documents")))
+  }
+
+  /** Registers `documents_rp` on a [[docs]] session: the eager
+    * repartitioned checkpoint when `small`, else the bare scan. */
+  private[queries] def withDocsRp(s2: SparkSession, small: Boolean): SparkSession = {
     val docsDf = s2.table("documents")
-    // SIZE-GATED (round 19, the InterpretedLoop.isSmall pattern): the
+    // SIZE-GATED (round 19, the SizeGate decision): the
     // eager repartition+localCheckpoint exists for BENCH-SHAPED inputs —
     // a single-row-group parquet file scans as ONE task, so a
     // per-document kernel (minhash/shingle/tokenize) over the bare scan
@@ -77,14 +85,12 @@ private[queries] trait LlmShared {
     // motivations vanish at scale: a 100 TB corpus already arrives in
     // thousands of splits (kernels map-parallel over the scan) and an
     // unconditional up-front full-corpus shuffle + checkpoint write
-    // would dominate the query. Small (≤ InterpretedLoop.SmallLoopBytes
-    // by Catalyst's estimate, which errs LARGE on unknown stats) →
-    // eager checkpoint, one up-front job leaving a LogicalRDD every CTE
-    // branch reads; large → the bare scan, filters/pruning push down
-    // untouched. Test hook graft.docsrp.large=1 forces the large path.
+    // would dominate the query. Small (SizeGate, which errs LARGE on
+    // unknown stats) → eager checkpoint, one up-front job leaving a
+    // LogicalRDD every CTE branch reads; large → the bare scan,
+    // filters/pruning push down untouched.
     val view =
-      if (graft.ops.InterpretedLoop.isSmall(docsDf) &&
-          !sys.props.get("graft.docsrp.large").contains("1"))
+      if (small)
         docsDf.repartition(s2.sparkContext.defaultParallelism).localCheckpoint()
       else docsDf
     view.createOrReplaceTempView("documents_rp")

@@ -1702,10 +1702,8 @@ class KqlCompilerSpec extends AnyFunSuite with BeforeAndAfterAll {
             |           sig = tostring(e)
             || order by s asc, t asc, hops asc, sig asc""".stripMargin
       val local = runG2(q).collect().map(_.toSeq).toSeq
-      sys.props("graft.graph.local") = "off"
-      val dist =
-        try runG2(q).collect().map(_.toSeq).toSeq
-        finally sys.props.remove("graft.graph.local")
+      val dist = KqlCompiler.compile(q, _ => df, java.time.Instant.now(), spark,
+        localGraph = false).collect().map(_.toSeq).toSeq
       assert(local == dist, s"mode='$mode'")
       assert(local.nonEmpty)
     }
@@ -2925,10 +2923,7 @@ class KqlCompilerSpec extends AnyFunSuite with BeforeAndAfterAll {
     StronglyConnected.resetProbeStats()
     // pin the DISTRIBUTED loop: this spec asserts the fixpoint's driver-
     // action budget, which the size-gated local Tarjan would bypass
-    sys.props("graft.graph.local") = "off"
-    val comp =
-      try StronglyConnected.components(edges).collect()
-      finally sys.props.remove("graft.graph.local")
+    val comp = StronglyConnected.components(edges, local = false).collect()
     assert(comp.length == n && comp.forall(_.getLong(1) == 1L), "one SCC anchored at min id 1")
     val steps = StronglyConnected.fixpointSteps.get
     val calls = StronglyConnected.minAncestorCalls.get

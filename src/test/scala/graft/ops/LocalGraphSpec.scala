@@ -18,11 +18,6 @@ class LocalGraphSpec extends AnyFunSuite with BeforeAndAfterAll {
     .getOrCreate()
   override def afterAll(): Unit = spark.stop()
 
-  private def distributedOff[A](body: => A): A = {
-    sys.props("graft.graph.local") = "off"
-    try body finally sys.props.remove("graft.graph.local")
-  }
-
   private def sortedPairs(df: DataFrame): Seq[(Any, Any)] =
     df.collect().map(r => (r.get(0), r.get(1))).toSeq
       .sortBy(p => (String.valueOf(p._1), String.valueOf(p._2)))
@@ -30,17 +25,17 @@ class LocalGraphSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def weakParity(pairs: DataFrame): Unit = {
     val local = LocalGraph.weakComponents(pairs)
       .getOrElse(fail("gate refused a small local relation"))
-    val dist = distributedOff {
-      graft.queries.LlmQueries.connectedComponents(pairs)
-        .select("doc_id", "cluster_rep")
-    }
+    val dist = graft.queries.LlmQueries.connectedComponents(pairs, local = false)
     assert(sortedPairs(local) == sortedPairs(dist))
+    // the same union-find pass yields the component sizes, and both
+    // paths emit rows in doc_id order
+    assert(local.collect().toSeq == dist.collect().toSeq)
   }
 
   private def strongParity(pairs: DataFrame): Unit = {
     val local = LocalGraph.strongComponents(pairs)
       .getOrElse(fail("gate refused a small local relation"))
-    val dist = distributedOff { StronglyConnected.components(pairs) }
+    val dist = StronglyConnected.components(pairs, local = false)
     assert(sortedPairs(local) == sortedPairs(dist))
   }
 
@@ -157,5 +152,38 @@ class LocalGraphSpec extends AnyFunSuite with BeforeAndAfterAll {
         .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
       assert(local == expected, s"case $case_")
     }
+  }
+
+  test("SizeGate: a join-built edge list over small leaves is admitted (q223 shape)") {
+    import spark.implicits._
+    // a self-join's root estimate multiplies its children; the leaf sum
+    // stays the size of what the plan reads
+    val cust = (1L to 1000L).map(k => (k, k % 50)).toDF("c", "grp")
+    val edges = cust.as("a").join(cust.as("b"), $"a.grp" === $"b.grp")
+      .select($"a.c".as("src"), $"b.c".as("dst"))
+    val rootEstimate = edges.queryExecution.optimizedPlan.stats.sizeInBytes
+    assert(rootEstimate > SizeGate.MaxBytes, s"root estimate $rootEstimate")
+    assert(SizeGate.small(edges))
+    val rows = SizeGate.collect(edges, SizeGate.MaxDriverRows)
+      .getOrElse(fail("gate refused a small join-built edge list"))
+    assert(rows.length == edges.count())
+  }
+
+  test("SizeGate: a relation over the row cap returns None") {
+    import spark.implicits._
+    val df = (1L to 101L).toDF("id")
+    assert(SizeGate.small(df))
+    assert(SizeGate.collect(df, 100).isEmpty)
+    assert(SizeGate.collect(df, 101).map(_.length).contains(101))
+  }
+
+  test("SizeGate: unknown leaf statistics err large") {
+    // a checkpoint-free RDD-backed relation carries the default (huge)
+    // size estimate, so the gate keeps it distributed
+    val rdd = spark.sparkContext.parallelize(1 to 10).map(org.apache.spark.sql.Row(_))
+    val df = spark.createDataFrame(rdd, org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("x", org.apache.spark.sql.types.IntegerType))))
+    assert(!SizeGate.small(df))
+    assert(SizeGate.collect(df, 100).isEmpty)
   }
 }

@@ -19,9 +19,9 @@ class ConnectedComponentsSpec extends AnyFunSuite with BeforeAndAfterAll {
     .getOrCreate()
   override def afterAll(): Unit = spark.stop()
 
-  private def cc(pairs: Seq[(Long, Long)]): Map[Long, (Long, Long)] = {
+  private def cc(pairs: Seq[(Long, Long)], local: Boolean = false): Map[Long, (Long, Long)] = {
     import spark.implicits._
-    LlmQueries.connectedComponents(pairs.toDF("id_a", "id_b"))
+    LlmQueries.connectedComponents(pairs.toDF("id_a", "id_b"), local)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
   }
 
@@ -57,9 +57,9 @@ class ConnectedComponentsSpec extends AnyFunSuite with BeforeAndAfterAll {
       Seq.empty)                                                 // empty
     shapes.foreach { pairs =>
       val df = pairs.toDF("id_a", "id_b")
-      val dist = LlmQueries.connectedComponents(df, allowLocal = false)
+      val dist = LlmQueries.connectedComponents(df, local = false)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-      val local = LlmQueries.connectedComponents(df, allowLocal = true)
+      val local = LlmQueries.connectedComponents(df, local = true)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
       assert(local == dist, s"shape $pairs")
     }
@@ -69,7 +69,7 @@ class ConnectedComponentsSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     val n = 1000L
     val pairs = (0L until n - 1).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val (df, rounds) = LlmQueries.connectedComponentsWithRounds(pairs)
+    val (df, rounds) = LlmQueries.connectedComponentsWithRounds(pairs, local = false)
     val got = df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(got.length == n)
     assert(got.forall { case (_, rep, size) => rep == 0L && size == n })
@@ -104,9 +104,11 @@ class ConnectedComponentsSpec extends AnyFunSuite with BeforeAndAfterAll {
         val verts = pairs.flatMap(p => Seq(p._1, p._2)).distinct
         val expected = verts.map(v => v -> find(v)).toMap
         val sizes = expected.values.groupBy(identity).map { case (r, vs) => r -> vs.size.toLong }
-        val got = cc(pairs)
-        assert(got.map { case (v, (rep, _)) => v -> rep } == expected, s"case $case_ reps diverged")
-        assert(got.forall { case (v, (rep, size)) => size == sizes(rep) }, s"case $case_ sizes diverged")
+        for (local <- Seq(false, true)) {
+          val got = cc(pairs, local)
+          assert(got.map { case (v, (rep, _)) => v -> rep } == expected, s"case $case_ reps diverged")
+          assert(got.forall { case (v, (rep, size)) => size == sizes(rep) }, s"case $case_ sizes diverged")
+        }
       }
     }
   }

@@ -492,15 +492,14 @@ class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
     // forced-large path: the corpus must arrive as the pruned parquet
     // scan itself — no LogicalRDD (checkpoint) and no round-robin
     // exchange materializing the whole corpus before the first filter
-    sys.props("graft.docsrp.large") = "1"
-    try {
-      val p = plan("q130_exact_substring")
-      assert(!p.contains("Scan ExistingRDD"),
-        "large path must not eagerly checkpoint the corpus")
-      assert(!p.contains("Exchange roundrobinpartitioning"),
-        "large path must not shuffle the full corpus up front")
-      assert(p.contains("Scan parquet") || p.contains("FileScan"), p.take(800))
-    } finally sys.props.remove("graft.docsrp.large")
+    val p = LlmQueries.withDocsRp(LlmQueries.docs(spark, dir), small = false)
+      .sql(LlmQueries.exactSubstringSql())
+      .queryExecution.explainString(ExplainMode.fromString("formatted"))
+    assert(!p.contains("Scan ExistingRDD"),
+      "large path must not eagerly checkpoint the corpus")
+    assert(!p.contains("Exchange roundrobinpartitioning"),
+      "large path must not shuffle the full corpus up front")
+    assert(p.contains("Scan parquet") || p.contains("FileScan"), p.take(800))
     // default path on bench-shaped testdata (single-row-group files,
     // Catalyst estimate well under the gate): the eager checkpoint that
     // keeps per-document kernels parallel and CTE re-reads free
