@@ -30,13 +30,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new ExpressionInfo(classOf[GraftExtensions].getName, name), builder))
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    // derived-timestamp predicate pushdown (see the rule's doc): cluster
-    // sessions get it with the functions; Tables.events self-installs it
-    // for ad-hoc sessions built without extensions
-    ext.injectOptimizerRule(_ => graft.plans.NanosTimePushdown)
-    // expensive trailing-sort projections evaluate once, above the range
-    // exchange (see the rule's doc)
-    ext.injectOptimizerRule(_ => graft.plans.DeferProjectPastSort)
+    // the engine's optimizer rules: cluster sessions get them with the
+    // functions; Graft.prepare installs them for sessions built without
+    // extensions
+    Graft.optimizerRules.foreach(rule => ext.injectOptimizerRule(_ => rule))
     fn(ext, "word_shingles", exprs => WordShingles(exprs.head, intLit(exprs(1))))
     fn(ext, "word_shingle_hashes", exprs => WordShingleHashes(exprs.head, intLit(exprs(1))))
     fn(ext, "word_shingle_count", exprs => WordShingleCount(exprs.head, intLit(exprs(1))))

@@ -7,9 +7,8 @@ import org.apache.spark.sql.SparkSession
   * variant, ALTERNATING variants within one JVM so JIT/GC/load drift
   * hits both sides equally (the round-15/17 lesson: sequential A-then-B
   * comparisons recorded up to 2× phantoms). A variant is a comma-joined
-  * set of `conf:<runtime SQL conf>=<value>` settings (anything else is
-  * set as a system property); variants are applied before each run and
-  * cleared after.
+  * set of `conf:<runtime SQL conf>=<value>` settings, applied over the
+  * engine's session policy before each run and cleared after.
   *
   *   runMain graft.PerfAB q146 7 conf:spark.sql.adaptive.enabled=true conf:spark.sql.adaptive.enabled=false
   *
@@ -25,12 +24,22 @@ object PerfAB {
     val reps = args(1).toInt
     val (flags, rest) = args.drop(2).toSeq.partition(_.startsWith("--"))
     val variants: Seq[String] = if (rest.isEmpty) Seq("") else rest
+    // a variant element "conf:spark.x.y=z" sets a runtime SQLConf for the
+    // run (restored after); anything else fails here, before any run
+    val settings = variants.map(v => v -> v.split(',').toSeq.filter(_.nonEmpty).map { kv =>
+      require(kv.startsWith("conf:") && kv.contains("="), s"variant element '$kv' is not conf:<key>=<value>")
+      val Array(k, value) = kv.stripPrefix("conf:").split("=", 2)
+      k -> value
+    }).toMap
     val spark = SparkSession.builder()
       .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
       .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
+    // policy first: a variant then overrides it, and clearing the variant
+    // restores the policy value rather than Spark's default
+    Graft.prepare(spark)
     spark.sparkContext.setLogLevel("WARN")
     val queries = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => names.exists(n.contains) }
@@ -59,26 +68,16 @@ object PerfAB {
         }
       })
 
-    // a variant element "conf:spark.x.y=z" sets a runtime SQLConf for the
-    // run (restored after); anything else is a system property
     val savedConf = scala.collection.mutable.Map.empty[String, Option[String]]
-    def applyVariant(v: String): Unit = v.split(',').filter(_.contains("=")).foreach { kv =>
-      val Array(k, value) = kv.split("=", 2)
-      if (k.startsWith("conf:")) {
-        val key = k.stripPrefix("conf:")
-        savedConf(key) = spark.conf.getOption(key)
-        spark.conf.set(key, value)
-      } else sys.props(k) = value
+    def applyVariant(v: String): Unit = settings(v).foreach { case (key, value) =>
+      savedConf(key) = spark.conf.getOption(key)
+      spark.conf.set(key, value)
     }
-    def clearVariant(v: String): Unit = v.split(',').filter(_.contains("=")).foreach { kv =>
-      val k = kv.split("=", 2)(0)
-      if (k.startsWith("conf:")) {
-        val key = k.stripPrefix("conf:")
-        savedConf.remove(key).foreach {
-          case Some(old) => spark.conf.set(key, old)
-          case None => spark.conf.unset(key)
-        }
-      } else sys.props.remove(k)
+    def clearVariant(v: String): Unit = settings(v).foreach { case (key, _) =>
+      savedConf.remove(key).foreach {
+        case Some(old) => spark.conf.set(key, old)
+        case None => spark.conf.unset(key)
+      }
     }
 
     // warm-up: one run of each (query, variant) pair, unrecorded

@@ -8,6 +8,9 @@ import org.apache.spark.sql.functions._
   * All engine queries take an `sfDir` (scale-factor directory) and read
   * parquet from it; at cluster scale the same code path reads a
   * partitioned table root, so nothing here assumes single-file inputs.
+  *
+  * Loaders only: they read and never change the session. Engine policy
+  * (conf and optimizer rules) lives in [[Graft.prepare]].
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -49,41 +52,6 @@ object Tables {
   } catch { case scala.util.control.NonFatal(_) => None }
 
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    // Older testdata vintages stored parquet TIMESTAMP(NANOS), which
-    // Spark's reader rejects outright; keep reading those as a nanos long
-    // (TESTDATA tables are driver-generated, not ours to rewrite).
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // Engine execution policy (round 21, guide §2.2): coalesce
-    // post-shuffle partitions to the advisory SIZE rather than keeping
-    // ~defaultParallelism tiny tasks. Spark's `parallelismFirst=true`
-    // default ignores advisoryPartitionSizeInBytes and floors partitions
-    // at minPartitionSize (1 MB) to maximize parallelism — the setting
-    // the docs themselves recommend turning off for resource efficiency.
-    // Measured here: a 32-core run spent more wall scheduling 32 micro-
-    // tasks per exchange than an 8-core run spent computing (full-suite
-    // 153 s at 32c vs 123 s at 8c, median per-query 8c/32c ratio 0.80);
-    // with size-first coalescing, per-query interleaved A/Bs improve up
-    // to 1.44× (q226 1.41→0.98 s) across the KQL/relational families.
-    // At data scale this is the guide's recommended posture outright
-    // (fewer, larger reduce partitions). Sessions whose stages are
-    // byte-small but CPU-superlinear (the LLM dedup/kernel module) opt
-    // OUT via the marker conf set in LlmShared.registerFunctions —
-    // bytes do not predict CPU for posting-list pair explodes, and
-    // size-first coalescing serialized their hottest loops (measured
-    // q24 2.15→3.23 s).
-    if (!spark.conf.getOption("spark.graft.aqe.keepParallelismFirst").contains("true"))
-      spark.conf.set("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-    // Self-install the trailing-sort projection deferral (see the rule's
-    // doc) for sessions built without GraftExtensions — every engine
-    // query reads through here, the NanosTimePushdown pattern. The
-    // check-then-append is synchronized on the session (ADVICE r20): two
-    // threads reading tables concurrently on a fresh session could both
-    // pass the exists() check and register the rule twice.
-    val deferRule = graft.plans.DeferProjectPastSort
-    spark.synchronized {
-      if (!spark.experimental.extraOptimizations.exists(_ eq deferRule))
-        spark.experimental.extraOptimizations ++= Seq(deferRule)
-    }
     val path = s"$sfDir/$name.parquet"
     val df = fingerprint(path) match {
       case Some(fp) =>
@@ -118,7 +86,8 @@ object Tables {
   def region(spark: SparkSession, sfDir: String): DataFrame = apply(spark, sfDir, "region")
   /** Surface `ts` as a proper TimestampType column regardless of how the
     * generator wrote it. Older testdata stored parquet TIMESTAMP(NANOS)
-    * (read back as a nanos long via `nanosAsLong`); current testdata stores
+    * (read back as a nanos long via the `nanosAsLong` policy that
+    * [[Graft.prepare]] sets); current testdata stores
     * TIMESTAMP(MICROS), which Spark reads natively. Branch on the actual
     * type so either vintage works. For the long form, integer `div` (not
     * `/`, which is double division and loses precision above 2^53) keeps
@@ -129,11 +98,6 @@ object Tables {
     val df = apply(spark, sfDir, "events")
     df.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
-        val rule = graft.plans.NanosTimePushdown
-        spark.synchronized {
-          if (!spark.experimental.extraOptimizations.exists(_ eq rule))
-            spark.experimental.extraOptimizations ++= Seq(rule)
-        }
         df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
       case _ => df
     }

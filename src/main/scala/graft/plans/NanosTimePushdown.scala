@@ -28,8 +28,8 @@ import org.apache.spark.sql.types.{LongType, TimestampType}
   * Conjuncts only: a bound derived from a predicate under OR/NOT would
   * not be implied. Idempotent (bounds already present are not re-added),
   * so it is safe in a fixed-point batch. Installed by
-  * [[graft.GraftExtensions]] (cluster path) and self-installed by
-  * `Tables.events` (library path). */
+  * [[graft.GraftExtensions]] (cluster path) and by
+  * [[graft.Graft.prepare]] (library path). */
 object NanosTimePushdown extends Rule[LogicalPlan] with PredicateHelper {
 
   /** timestamp_micros(a div n) over a plain long attribute. */

@@ -23,43 +23,42 @@ private[queries] trait LlmShared {
     * the rule only costs here (measured 23% on q24 at sf0.1); its benefit
     * case — pruning stored array columns before a generate — does not
     * occur in this engine. The exclusion applies to the session PASSED
-    * IN; the top-level `queries` pass a child session (see [[docs]]) so
-    * it never affects the caller's other workloads. */
-  private[graft] def registerFunctions(s: SparkSession): Unit = {
+    * IN; the top-level `queries` pass a child session (see [[child]]) so
+    * it never affects the caller's other workloads. Call it after
+    * [[graft.Graft.prepare]], whose coalescing policy this overrides. */
+  private[graft] def registerFunctions(s: SparkSession): SparkSession = {
     GraftFunctions.register(s)
     GraftFunctions.registerMinhash(s, MinhashParams, MinhashP)
     s.conf.set("spark.sql.optimizer.excludedRules",
       "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
     // Keep Spark's parallelism-first AQE coalescing for THIS module
-    // (opting out of the size-first engine default Tables.apply sets,
-    // round 21): these queries' post-shuffle stages are byte-small but
-    // CPU-superlinear (posting-list pair explodes, per-token kernels),
-    // so coalescing them to advisory SIZE serializes the hottest loops
-    // — measured: q24 2.15→3.23 s, q164 2.47→3.29 s, q53 1.95→2.78 s
-    // under size-first. Bytes do not predict CPU here; the default's
-    // parallelism floor does the right thing. This also keeps the
-    // float-state loops' partitioning (q111/q144/q64/q65) byte-
-    // identical to prior rounds. The conf is set here explicitly, so the
-    // result does not depend on whether Tables.apply ran first; the
-    // marker keeps later Tables.apply calls from flipping it back.
+    // (opting out of the size-first engine policy): these queries'
+    // post-shuffle stages are byte-small but CPU-superlinear
+    // (posting-list pair explodes, per-token kernels), so coalescing
+    // them to advisory SIZE serializes the hottest loops — measured:
+    // q24 2.15→3.23 s, q164 2.47→3.29 s, q53 1.95→2.78 s under
+    // size-first. This also keeps the float-state loops' partitioning
+    // (q111/q144/q64/q65) byte-identical to prior rounds.
     s.conf.set("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
-    s.conf.set("spark.graft.aqe.keepParallelismFirst", "true")
+    s
   }
 
   /** LLM queries run in a CHILD session (`newSession`: same
     * SparkContext and shared catalog, but separate conf / temp views /
-    * function registry), so the [[registerFunctions]] rule exclusion is
-    * scoped to this module's plans and never leaks into the caller's
-    * session — a mixed workload keeps `InferFiltersFromGenerate` for its
-    * stored-array explodes (VERDICT r4). The returned DataFrames carry
-    * the child session, so their execution (whenever the caller acts on
-    * them) sees the exclusion without any save/restore races. */
-  private[queries] def docs(s: SparkSession, dir: String): SparkSession = {
-    val s2 = s.newSession()
-    registerFunctions(s2)
-    Tables.documents(s2, dir).createOrReplaceTempView("documents")
+    * function registry), prepared with the engine policy and then
+    * [[registerFunctions]], so the rule exclusion is scoped to this
+    * module's plans and never leaks into the caller's session — a mixed
+    * workload keeps `InferFiltersFromGenerate` for its stored-array
+    * explodes (VERDICT r4). The returned DataFrames carry the child
+    * session, so their execution (whenever the caller acts on them) sees
+    * the exclusion without any save/restore races. */
+  private def child(s: SparkSession, view: String, read: SparkSession => DataFrame): SparkSession = {
+    val s2 = registerFunctions(graft.Graft.prepare(s.newSession()))
+    read(s2).createOrReplaceTempView(view)
     s2
   }
+  private[queries] def docs(s: SparkSession, dir: String): SparkSession =
+    child(s, "documents", Tables.documents(_, dir))
   /** [[docs]] plus a `documents_rp` view repartitioned to the default
     * parallelism — for queries whose cost is a per-document KERNEL
     * (minhash/shingle/tokenize) rather than the scan: the driver
@@ -96,19 +95,10 @@ private[queries] trait LlmShared {
     view.createOrReplaceTempView("documents_rp")
     s2
   }
-  private[queries] def embs(s: SparkSession, dir: String): SparkSession = {
-    val s2 = s.newSession()
-    registerFunctions(s2)
-    Tables.embeddings(s2, dir).createOrReplaceTempView("embeddings")
-    s2
-  }
-  private[queries] def evts(s: SparkSession, dir: String): SparkSession = {
-    val s2 = s.newSession()
-    registerFunctions(s2)
-    Tables.events(s2, dir).createOrReplaceTempView("events")
-    s2
-  }
-
+  private[queries] def embs(s: SparkSession, dir: String): SparkSession =
+    child(s, "embeddings", Tables.embeddings(_, dir))
+  private[queries] def evts(s: SparkSession, dir: String): SparkSession =
+    child(s, "events", Tables.events(_, dir))
 
   /** MinHash signature (K=12, universal hashing h_k(x) = (a_k·x + b_k)
     * mod p over a 60-bit md5-derived base hash) + banded LSH (4 bands ×

@@ -31,4 +31,24 @@ class GraftSpec extends AnyFunSuite with BeforeAndAfterAll {
     val expected = spark.sql("SELECT count(1) FROM events WHERE value > 50").collect().head.getLong(0)
     assert(n == expected && n > 0)
   }
+
+  test("prepare applies the policy once when 8 threads build queries on a fresh session") {
+    val fresh = spark.newSession()
+    val names = SparkEntry.queries.keys.toSeq.sorted.take(8)
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(names.size)
+    try {
+      val builds = names.map(q => pool.submit(() => {
+        start.await()
+        SparkEntry.queries(q)(fresh, "/root/testdata/sf0.001")
+      }))
+      start.countDown()
+      builds.foreach(_.get())
+    } finally pool.shutdown()
+    val rules = fresh.experimental.extraOptimizations
+    for (rule <- Graft.optimizerRules)
+      assert(rules.count(_ eq rule) == 1, s"${rule.ruleName} installed ${rules.count(_ eq rule)}×")
+    assert(fresh.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+    assert(fresh.conf.get("spark.sql.adaptive.coalescePartitions.parallelismFirst") == "false")
+  }
 }

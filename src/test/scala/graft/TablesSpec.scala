@@ -5,7 +5,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** `Tables.apply` session policy and its footer-schema cache. */
+/** `Tables` reads without changing the session, the engine policy
+  * `Graft.prepare` applies instead, and the footer-schema cache. */
 class TablesSpec extends AnyFunSuite with BeforeAndAfterAll {
   private lazy val spark = SparkSession.builder()
     .master("local[2]")
@@ -46,11 +47,28 @@ class TablesSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     val tmp = Files.createTempDirectory("tables-spec")
     Seq((1L, "a")).toDF("doc_id", "text").write.parquet(tmp.resolve("documents.parquet").toString)
-    val child = spark.newSession()
     val key = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
-    Tables(child, tmp.toString, "documents")
-    assert(child.conf.get(key) == "false", "engine default: size-first coalescing")
-    graft.queries.LlmQueries.registerFunctions(child)
-    assert(child.conf.get(key) == "true")
+    val prepared = Graft.prepare(spark.newSession())
+    assert(prepared.conf.get(key) == "false", "engine policy: size-first coalescing")
+    val registeredFirst = Graft.prepare(spark.newSession())
+    graft.queries.LlmQueries.registerFunctions(registeredFirst)
+    Tables(registeredFirst, tmp.toString, "documents")
+    assert(registeredFirst.conf.get(key) == "true")
+    val readFirst = Graft.prepare(spark.newSession())
+    Tables(readFirst, tmp.toString, "documents")
+    graft.queries.LlmQueries.registerFunctions(readFirst)
+    assert(readFirst.conf.get(key) == "true")
+    Graft.prepare(readFirst)
+    assert(readFirst.conf.get(key) == "true", "a second prepare keeps the caller's value")
+  }
+
+  test("reading every table through Tables changes no session conf and no optimizer rule") {
+    val (fresh, dir) = (spark.newSession(), "/root/testdata/sf0.001")
+    val conf = fresh.conf.getAll
+    val rules = fresh.experimental.extraOptimizations
+    Tables.names.foreach(Tables(fresh, dir, _))
+    Tables.events(fresh, dir)
+    assert(fresh.conf.getAll == conf)
+    assert(fresh.experimental.extraOptimizations == rules)
   }
 }

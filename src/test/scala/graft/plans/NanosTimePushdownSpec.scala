@@ -23,8 +23,7 @@ class NanosTimePushdownSpec extends AnyFunSuite with BeforeAndAfterAll {
     * observable and nothing constant-folds away). */
   private lazy val frame = {
     import spark.implicits._
-    if (!spark.experimental.extraOptimizations.exists(_ eq NanosTimePushdown))
-      spark.experimental.extraOptimizations ++= Seq(NanosTimePushdown)
+    graft.Graft.prepare(spark)
     val dir = java.nio.file.Files.createTempDirectory("nanos-push").toString
     // boundary-dense nanos: multiples of 1000 plus every remainder shape,
     // and negative (pre-1970) values where trunc-toward-zero != floor
