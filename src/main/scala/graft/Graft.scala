@@ -37,12 +37,20 @@ object Graft {
     *    ~defaultParallelism tiny tasks per exchange, and a 32-core run
     *    spent more time scheduling them than an 8-core run computing
     *    (per-query A/Bs up to 1.44×, q226 1.41→0.98 s).
-    *  - [[optimizerRules]], for sessions built without [[GraftExtensions]]. */
+    *  - [[optimizerRules]], for sessions built without [[GraftExtensions]].
+    *  - streaming checkpoints through
+    *    [[graft.streaming.LocalCheckpointFileManager]], unless the session
+    *    already names a manager: on local disk Spark's default starts
+    *    about 20 `readlink`/`chmod` processes per micro-batch (no native
+    *    Hadoop library); other schemes keep Spark's default manager. */
   def prepare(spark: SparkSession): SparkSession = {
     prepared.synchronized {
       if (prepared.add(spark)) {
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         spark.conf.set("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
+        val checkpoints = graft.streaming.LocalCheckpointFileManager.ClassKey
+        if (spark.conf.getOption(checkpoints).isEmpty)
+          spark.conf.set(checkpoints, classOf[graft.streaming.LocalCheckpointFileManager].getName)
         val have = spark.experimental.extraOptimizations
         spark.experimental.extraOptimizations ++= optimizerRules.filterNot(r => have.exists(_ eq r))
       }

@@ -1,6 +1,8 @@
 package graft.pipeline
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge}
+import org.apache.spark.sql.catalyst.expressions.{Alias, GetStructField, If, Literal, NamedExpression, Not, Or}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, SubqueryAlias}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -19,21 +21,27 @@ import org.apache.spark.sql.types.StructType
   *
   * Records of `topic` have their JSON values parsed with `valueSchema`,
   * the KQL pipeline applied row-wise (where/extend/project — the
-  * stream-safe subset; summarize/join would change the record model),
-  * and the surviving rows re-encoded as JSON values. Records of other
+  * stream-safe subset, enforced at construction: summarize/join would
+  * change the record model and fail there), and the surviving rows
+  * re-encoded as JSON values. Records of other
   * topics (and tombstones, which must reach the sink's F1 filter intact)
   * pass through untouched. Kafka metadata (topic/partition/offset/key/
   * headers) rides along protected: a transform that drops or collides
   * with a metadata column fails loudly at compile time.
   *
-  * Scale: parse → row-wise ops → re-encode are all narrow (one codegen
-  * span, no shuffle), so the pipeline's linear-in-partitions scaling is
-  * preserved; at-least-once semantics are untouched because the stage is
-  * upstream of the offset-gated sink.
+  * One pass: the KQL is compiled over the target rows, then its plan is
+  * re-rooted onto one projection of the whole source (filters become
+  * `NOT target OR c`, computed columns `IF(target, e, NULL)`, the value
+  * `IF(target, to_json(…), value)`), so each batch reads its source and
+  * evaluates its projection once. Parse → row-wise ops → re-encode are
+  * all narrow (one codegen span, no shuffle), so the pipeline's
+  * linear-in-partitions scaling is preserved; at-least-once semantics
+  * are untouched because the stage is upstream of the offset-gated sink.
   */
 object KqlTransform {
 
   private val MetaCols = Seq("topic", "partition", "offset", "key", "headers")
+  private val TargetCol = "__kql_target"
 
   def apply(df: DataFrame, topic: String, valueSchema: StructType, kql: String): DataFrame = {
     require(Set("topic", "value").subsetOf(df.columns.toSet),
@@ -42,11 +50,11 @@ object KqlTransform {
     val collisions = valueSchema.fieldNames.toSeq.intersect(MetaCols)
     require(collisions.isEmpty,
       s"value schema collides with kafka metadata columns: ${collisions.mkString(", ")}")
-    val isTarget = col("topic") === topic && col("value").isNotNull
-    val passthrough = df.filter(!coalesce(isTarget, lit(false)))
-      .select(meta.map(col) :+ col("value"): _*)
+    // the one projection of the source every row goes through
+    val base = df.select(meta.map(col) :+ col("value") :+
+      coalesce(col("topic") === topic && col("value").isNotNull, lit(false)).as(TargetCol): _*)
 
-    val parsed = df.filter(isTarget)
+    val parsed = base.filter(col(TargetCol))
       .withColumn("__v", from_json(col("value").cast("string"), valueSchema))
       .select(meta.map(col) ++ valueSchema.fieldNames.map(f => col(s"__v.$f").as(f)): _*)
     val transformed = graft.kql.KqlCompiler.compile(kql, _ => parsed)
@@ -69,8 +77,33 @@ object KqlTransform {
     require(valueCols.nonEmpty, "KQL transform removed every value field")
     val reEncoded = transformed.select(
       meta.map(col) :+
-        to_json(struct(valueCols.map(col): _*)).cast("binary").as("value"): _*)
+        to_json(struct(valueCols.map(col): _*)).cast(df.schema("value").dataType).as("value"): _*)
 
-    reEncoded.unionByName(passthrough)
+    // Re-root the target-only plan onto `base`, so the source is scanned
+    // once: every row flows through, carrying its original value and the
+    // target flag; filters and computed columns apply to target rows only.
+    val baseOut = base.queryExecution.analyzed.output
+    val (value, target) = (baseOut(meta.size), baseOut.last)
+    def guarded(e: NamedExpression): NamedExpression = e match {
+      case a @ Alias(_: GetStructField, _) => a // a parsed field: null off target already
+      case a: Alias =>
+        Alias(If(target, a.child, Literal(null, a.child.dataType)), a.name)(
+          a.exprId, a.qualifier, a.explicitMetadata, a.nonInheritableMetadataKeys)
+      case other => other
+    }
+    def carried(p: LogicalPlan): LogicalPlan = p match {
+      case Filter(c, child) if c.semanticEquals(target) => child // parsed's filter, over `base`
+      case Filter(c, child) => Filter(Or(Not(target), c), carried(child))
+      case Project(list, child) =>
+        val ids = list.map(_.exprId).toSet
+        Project(list.map(guarded) ++ Seq(value, target).filterNot(a => ids(a.exprId)), carried(child))
+      case SubqueryAlias(id, child) => SubqueryAlias(id, carried(child))
+      case other =>
+        throw new IllegalArgumentException(
+          s"KQL transform must be row-wise (where, extend, project…); `${other.nodeName}` is not")
+    }
+    val Project(metaOut :+ (encoded: Alias), body) = reEncoded.queryExecution.analyzed
+    GraftColumnBridge.ofRows(df.sparkSession,
+      Project(metaOut :+ Alias(If(target, encoded.child, value), "value")(), carried(body)))
   }
 }

@@ -13,10 +13,11 @@ import scala.collection.mutable
   *
   * {{{
   * source (kafka-schema DataFrame: key, value, topic, partition, offset)
-  *   └─ tombstone filter (Catalyst, F1)
   *       └─ foreachBatch
   *           └─ foreachPartition            — no shuffle: Kafka partitions
-  *               ├─ route topic → mapping   —   arrive pre-partitioned (R1)
+  *               │                              arrive pre-partitioned
+  *               ├─ tombstone filter (F1)
+  *               ├─ route topic → mapping   — (R1)
   *               ├─ RollingFileWriter       — size-OR-time gzip roll (B1-B4)
   *               └─ IngestPipe.handleRoll   — retry/DLQ/status (K1-K5)
   *       └─ checkpoint commit               — offsets advance ONLY if the
@@ -55,12 +56,10 @@ final class KustoSparkPipeline(
       if (cols.contains("headers")) withKey
       else withKey.withColumn("headers", lit(null).cast(headersType))
 
-    // F1 tombstone filter — declarative, pushed into the scan by Catalyst.
     val live = withHeaders
       .select(col("topic").cast("string"), col("partition").cast("int"),
         col("offset").cast("long"), col("key").cast("binary"), col("value").cast("binary"),
         col("headers").cast(headersType))
-      .filter(col("value").isNotNull)
 
     val conf = config
     val mkClient = clientFactory
@@ -74,7 +73,10 @@ final class KustoSparkPipeline(
       val retry = RetryPolicy(conf.maxRetryTimeMs, conf.retryBackoffMs, sleeper)
       val writers = mutable.Map.empty[(String, Int), (RollingFileWriter, IngestPipe)]
       try {
-        rows.foreach { row =>
+        // F1 tombstone filter, per row: as a Catalyst filter it would be
+        // pushed down and inlined into the source's projection, and a
+        // KqlTransform value is an IF over the whole parse → re-encode
+        rows.filterNot(_.isNullAt(4)).foreach { row =>
           val hs = row.getAs[scala.collection.Seq[Row]](5) match {
             case null => Nil
             case rs => rs.iterator.map(h => RecordHeader(h.getString(0), h.getAs[Array[Byte]](1))).toSeq
@@ -148,15 +150,19 @@ final class KustoSparkPipeline(
     }
   }
 
-  /** Start the streaming query: source must have the kafka-source schema. */
+  /** Start the streaming query: source must have the kafka-source schema.
+    * Applies the engine's session policy first ([[graft.Graft.prepare]]),
+    * which gives a local checkpoint a log that starts no processes. */
   def start(source: DataFrame, checkpointDir: String,
-            trigger: Trigger = Trigger.ProcessingTime(0L)): StreamingQuery =
+            trigger: Trigger = Trigger.ProcessingTime(0L)): StreamingQuery = {
+    graft.Graft.prepare(source.sparkSession)
     source.writeStream
       .queryName("kusto-sink")
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch((df: DataFrame, id: Long) => processBatch(df, id))
       .start()
+  }
 }
 
 object KustoSparkPipeline {

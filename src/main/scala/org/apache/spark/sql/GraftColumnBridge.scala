@@ -24,6 +24,11 @@ object GraftColumnBridge {
 
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
 
+  /** A DataFrame over a resolved logical plan — how
+    * [[graft.pipeline.KqlTransform]] hands back its re-rooted plan. */
+  def ofRows(spark: SparkSession, plan: catalyst.plans.logical.LogicalPlan): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
   /** Membership-in-subquery as a composable boolean Column.
     *
     * Wraps catalyst `InSubquery(value, ListQuery(plan))` over the

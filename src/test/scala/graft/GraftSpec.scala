@@ -13,6 +13,7 @@ class GraftSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
   override def afterAll(): Unit = spark.stop()
+  private val checkpointKey = "spark.sql.streaming.checkpointFileManagerClass"
 
   test("init registers every table view and the native functions") {
     Graft.init(spark, "/root/testdata/sf0.001")
@@ -50,5 +51,16 @@ class GraftSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(rules.count(_ eq rule) == 1, s"${rule.ruleName} installed ${rules.count(_ eq rule)}×")
     assert(fresh.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
     assert(fresh.conf.get("spark.sql.adaptive.coalescePartitions.parallelismFirst") == "false")
+    assert(fresh.conf.get(checkpointKey) == classOf[graft.streaming.LocalCheckpointFileManager].getName)
+  }
+
+  test("prepare names the local checkpoint manager unless the session already names one") {
+    val fresh = spark.newSession()
+    assert(fresh.conf.getOption(checkpointKey).isEmpty)
+    assert(Graft.prepare(fresh).conf.get(checkpointKey) ==
+      classOf[graft.streaming.LocalCheckpointFileManager].getName)
+    val own = spark.newSession()
+    own.conf.set(checkpointKey, "com.example.TheirCheckpointFileManager")
+    assert(Graft.prepare(own).conf.get(checkpointKey) == "com.example.TheirCheckpointFileManager")
   }
 }
