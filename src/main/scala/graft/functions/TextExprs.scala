@@ -3,7 +3,7 @@ package graft.functions
 import java.security.MessageDigest
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, QuinaryExpression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -134,6 +134,23 @@ object TextHash extends Serializable {
     var i = 0
     while (i < b.length) { out(i) = (b(i) & 0xff).toLong; i += 1 }
     org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(out)
+  }
+
+  /** indexof(src, look, start, length, occurrence) for `start >= 0` and
+    * `occurrence >= 1`: the 0-based character index of the Nth match of
+    * `look` at or after `start` that lies inside the window
+    * `[0, start + length)` (`length < 0`: to the end), else -1. One walk
+    * of `UTF8String.indexOf`; an empty `look` matches at 0, as Spark's
+    * `locate` does. */
+  def indexOfNth(src: UTF8String, look: UTF8String, start: Int, length: Int, occurrence: Int): Long = {
+    val window =
+      if (length >= 0) src.substringSQL(1, math.min(start.toLong + length, Int.MaxValue).toInt)
+      else src
+    if (look.numBytes() == 0) return 0L
+    var at = window.indexOf(look, start)
+    var n = 1
+    while (at >= 0 && n < occurrence) { at = window.indexOf(look, at + 1); n += 1 }
+    at.toLong
   }
 
   def codepointsFrom(s: UTF8String): org.apache.spark.sql.catalyst.util.ArrayData = {
@@ -537,6 +554,11 @@ private[functions] object TypeGuards {
     case other => TypeCheckResult.TypeCheckFailure(
       s"$fn requires a STRING argument, got ${other.catalogString}")
   }
+  def requireInt(fn: String, e: Expression): TypeCheckResult = e.dataType match {
+    case IntegerType => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"$fn requires an INT argument, got ${other.catalogString}")
+  }
   def requireDoubleArray(fn: String, e: Expression): TypeCheckResult = e.dataType match {
     case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
     case other => TypeCheckResult.TypeCheckFailure(
@@ -730,6 +752,33 @@ case class Utf8Bytes(child: Expression) extends UnaryExpression {
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, c => s"graft.functions.TextHash.utf8Bytes($c)")
   override protected def withNewChildInternal(newChild: Expression): Utf8Bytes = copy(child = newChild)
+}
+
+/** indexof(src, look, start, length, occurrence): Kusto's windowed
+  * Nth-occurrence search (see [[TextHash.indexOfNth]]); null when any
+  * argument is null, `start < 0` or `occurrence < 1`. */
+case class IndexOfNth(src: Expression, look: Expression, start: Expression,
+                      length: Expression, occurrence: Expression) extends QuinaryExpression {
+  override def children: Seq[Expression] = Seq(src, look, start, length, occurrence)
+  override def checkInputDataTypes(): TypeCheckResult =
+    (Seq(src, look).map(TypeGuards.requireString("indexof", _)) ++
+      Seq(start, length, occurrence).map(TypeGuards.requireInt("indexof", _)))
+      .find(_ != TypeCheckResult.TypeCheckSuccess).getOrElse(TypeCheckResult.TypeCheckSuccess)
+  override def dataType: DataType = LongType
+  override def nullable: Boolean = true
+  override protected def nullSafeEval(s: Any, l: Any, st: Any, len: Any, occ: Any): Any =
+    if (st.asInstanceOf[Int] < 0 || occ.asInstanceOf[Int] < 1) null
+    else TextHash.indexOfNth(s.asInstanceOf[UTF8String], l.asInstanceOf[UTF8String],
+      st.asInstanceOf[Int], len.asInstanceOf[Int], occ.asInstanceOf[Int])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (s, l, st, len, occ) => s"""
+      if ($st < 0 || $occ < 1) {
+        ${ev.isNull} = true;
+      } else {
+        ${ev.value} = graft.functions.TextHash.indexOfNth($s, $l, $st, $len, $occ);
+      }""")
+  override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): IndexOfNth =
+    IndexOfNth(newChildren(0), newChildren(1), newChildren(2), newChildren(3), newChildren(4))
 }
 
 case class CodepointsFromString(child: Expression) extends UnaryExpression {

@@ -7216,46 +7216,19 @@ object KqlCompiler {
             GraftColumnBridge.catalystExpression(args.head(df))))
         }
         case "reverse" => arity(1); df => reverse(args.head(df))
-        // Kusto indexof is 0-based, -1 when absent (instr is 1-based, 0-absent)
+        // Kusto indexof: 0-based, -1 when absent; the optional start,
+        // length (-1 = to the end) and occurrence run in one native walk
+        // (null when start < 0 or occurrence < 1)
         case "indexof" =>
           if (args.length < 2 || args.length > 5)
             throw new KqlParseException("indexof() expects 2..5 arguments")
           df => {
-            val src = args(0)(df); val look = args(1)(df)
-            if (args.length == 2) (instr(src, look) - lit(1)).cast("long")
-            else {
-              // start/length window + Nth occurrence: walk with Spark's
-              // 1-based locate from the window start; -1 when absent or
-              // past the window (Kusto: length -1 = to end)
-              val start = args(2)(df).cast("int")
-              val len = if (args.length >= 4) args(3)(df).cast("int") else lit(-1)
-              val occ = if (args.length == 5) args(4)(df).cast("int") else lit(1)
-              // fold occurrence via repeated locate on a bounded literal
-              // range (occurrence beyond 16 is a loud error — the
-              // documented-subset stance for an unbounded runtime loop)
-              val windowed = when(len >= 0, src.substr(lit(1), start + len)).otherwise(src)
-              // column-position locate: Spark's functions.locate takes
-              // literal args only, so drop to the catalyst StringLocate
-              def locateFrom(str: Column, sub: Column, p: Column): Column = {
-                import org.apache.spark.sql.GraftColumnBridge
-                GraftColumnBridge.column(
-                  org.apache.spark.sql.catalyst.expressions.StringLocate(
-                    GraftColumnBridge.catalystExpression(sub),
-                    GraftColumnBridge.catalystExpression(str),
-                    GraftColumnBridge.catalystExpression(p.cast("int"))))
-              }
-              def nth(n: Int): Column = {
-                var p: Column = locateFrom(windowed, look, start + 1)
-                var i = 1
-                while (i < n) { p = when(p > 0, locateFrom(windowed, look, p + 1)).otherwise(lit(0)); i += 1 }
-                p
-              }
-              val occs = (1 to 16).foldLeft(when(lit(false), lit(0))) { (acc, n) =>
-                acc.when(occ === n, nth(n))
-              }.otherwise(lit(0))
-              when(start < 0 || occ < 1 || occ > 16, lit(null).cast("long"))
-                .otherwise((occs - 1).cast("long"))
-            }
+            import org.apache.spark.sql.GraftColumnBridge
+            def arg(i: Int, default: Int): Column =
+              if (args.length > i) args(i)(df).cast("int") else lit(default)
+            val in = Seq(args(0)(df).cast("string"), args(1)(df).cast("string"),
+              arg(2, 0), arg(3, -1), arg(4, 1)).map(GraftColumnBridge.catalystExpression)
+            GraftColumnBridge.column(graft.functions.IndexOfNth(in(0), in(1), in(2), in(3), in(4)))
           }
         case "strrep" => arity(2); df => repeat(args(0)(df), args(1)(df).cast("int"))
         case "array_length" => arity(1); df => size(args.head(df)).cast("long")

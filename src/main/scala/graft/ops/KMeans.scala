@@ -1,33 +1,46 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, StructField, StructType}
 
 /** Iterated Lloyd's k-means over an embedding column — the TRAINING loop
   * that completes the train → index → search story: q60 is one M-step,
   * q61 one E-step, q62 searches a trained codebook; this composes them
   * until the assignment fixes or `maxIter` rounds run.
   *
-  * Scale design (the q41 connected-components playbook):
-  *  - The codebook is k×dim doubles — broadcast every round; the E-step
-  *    is a map-side cross score + one min_by hash aggregate (partial
-  *    rows combine map-side), never a sort or a shuffled join of the
-  *    vector table against itself.
-  *  - The M-step is posexplode → ONE partial/final hash aggregate on
-  *    (cluster, pos) — no collect_list of vectors, k×dim rows return.
-  *  - Convergence is decided from an O(1) (count, bit_xor(xxhash64))
-  *    checksum of the assignment per round — no row data ever reaches
-  *    the driver (sum() would overflow under ANSI mode; bit_xor can't).
-  *  - Each round's tiny codebook is localCheckpoint'd so the plan stays
-  *    flat instead of nesting one full E+M subtree per round.
+  * Scale design: one Spark query per Lloyd round, nothing but k×dim
+  * rows reaching the driver.
+  *  - The vectors are read once, by a set-up query that fills the `vecs`
+  *    checkpoint and returns the `vec_id < k` seed codebook.
+  *  - The codebook (k×dim doubles) lives on the driver and enters each
+  *    round as a literal, so the E-step is a map-side column:
+  *    `array_min(transform(codebook, c -> struct(l2sq_d(e, c.cvec),
+  *    c.cluster))).cluster`. `array_min` orders structs field by field
+  *    (nulls first), the same order `min_by(…, struct(d2, cluster))`
+  *    uses, so ties break on (d2, cluster) and no vector is shuffled.
+  *  - The same query posexplodes the vector and runs ONE partial/final
+  *    hash aggregate on (cluster, pos): the 6dp-rounded mean per
+  *    position (the M-step), plus `count` and
+  *    `bit_xor(xxhash64(vec_id, cluster))` over one row per vector (the
+  *    convergence checksum; sum() would overflow under ANSI mode,
+  *    bit_xor can't). Only those k×dim rows are collected; the driver
+  *    sums and XORs them into the round's (count, xor) signature and
+  *    places the means by `pos` into the next codebook. Float sums stay
+  *    inside Spark's `avg`; the driver does no float arithmetic.
+  *  - The codebook needs no checkpoint: it is a literal each round and a
+  *    local relation on return.
   *
   * Determinism (oracle parity, the q60/q61 rules): centroids round to
-  * 6dp after every M-step, distances are explicit sequential folds over
-  * zip_with (fixed IEEE order), argmin ties break on (d2, cluster).
-  * Early stop agrees with a fixed-iteration unrolled oracle: when the
-  * assignment repeats, one more M-step over the same groups reproduces
-  * the same rounded centroids, so returning the previous codebook is
-  * exact, not approximate.
+  * 6dp after every M-step, distances are explicit sequential folds
+  * (fixed IEEE order), argmin ties break on (d2, cluster). A centroid is
+  * as long as its longest member; a cluster left with no non-empty
+  * member drops out of the codebook. Early stop agrees with a
+  * fixed-iteration unrolled oracle: when the assignment repeats, one
+  * more M-step over the same groups reproduces the same rounded
+  * centroids, so returning the previous codebook is exact, not
+  * approximate.
   */
 object KMeans {
 
@@ -42,82 +55,74 @@ object KMeans {
   }
 
   /** Like [[train]] but returns the assembled codebook
-    * (`cluster, cvec: array<double>`) — the shape an IVF index consumes
-    * directly (q65), saving the explode/reassemble round-trip. */
+    * (`cluster, cvec: array<double>`, a local relation) — the shape an
+    * IVF index consumes directly (q65), saving the explode/reassemble
+    * round-trip. `vec_id` must be unique; `cluster` has its type. */
   def trainCodebook(spark: SparkSession, emb: DataFrame, k: Int, maxIter: Int): (DataFrame, Int) = {
     require(k > 0 && maxIter > 0, s"need k > 0 and maxIter > 0, got k=$k maxIter=$maxIter")
-    // LAZY checkpoints (the round-15 job-batching discipline): each
-    // round's checksum action materializes the pending frames in the
-    // SAME job — lineage still truncates, one job per round saved
-    // FAULT-TOLERANCE trade (round-17 advisor): localCheckpoint
-    // blocks are NOT recomputable after executor loss — on a
-    // multi-executor cluster a lost block fails the job where persist
-    // would recompute; blocks also release via driver GC + ContextCleaner
-    // rather than an explicit unpersist. Acceptable for the local bench
-    // (one JVM, no executor loss); a cluster deployment should prefer
-    // reliable checkpointing (spark.sparkContext.setCheckpointDir +
+    // FAULT-TOLERANCE trade (round-17 advisor): localCheckpoint blocks
+    // are NOT recomputable after executor loss — on a multi-executor
+    // cluster a lost block fails the job where persist would recompute;
+    // blocks also release via driver GC + ContextCleaner rather than an
+    // explicit unpersist. Acceptable for the local bench (one JVM, no
+    // executor loss); a cluster deployment should prefer reliable
+    // checkpointing (spark.sparkContext.setCheckpointDir +
     // .checkpoint()) for loop invariants.
     val vecs = emb.select(col("vec_id"), col("e")).localCheckpoint(eager = false)
-    var cents = vecs.filter(col("vec_id") < k)
-      .select(col("vec_id").as("cluster"), col("e").as("cvec"))
-      .localCheckpoint(eager = false)
-
-    // native squared-L2 kernel — same left-to-right (x−y)² fold order
-    // as the retired aggregate(zip_with) HOF (the Lloyd E-step inner
-    // loop: evaluated per vector × centroid per round)
-    val d2 = {
-      import org.apache.spark.sql.GraftColumnBridge
-      GraftColumnBridge.column(graft.functions.L2SqD(
-        GraftColumnBridge.catalystExpression(col("e")),
-        GraftColumnBridge.catalystExpression(col("cvec"))))
-    }
-
-    def eStep(): DataFrame =
-      vecs.crossJoin(broadcast(cents))
-        .withColumn("d2", d2)
-        .groupBy(col("vec_id"))
-        .agg(min_by(
-          struct(col("e").as("e"), col("cluster").as("assigned")),
-          struct(col("d2"), col("cluster"))).as("w"))
-        .select(col("vec_id"), col("w.e").as("e"), col("w.assigned").as("assigned"))
-
-    def checksum(assign: DataFrame): (Long, Long) = {
-      val row = assign.agg(
-        count(lit(1)), bit_xor(xxhash64(col("vec_id"), col("assigned")))).head()
-      (row.getLong(0), if (row.isNullAt(1)) 0L else row.getLong(1))
-    }
+    val schema = StructType(Seq(
+      StructField("cluster", vecs.schema("vec_id").dataType),
+      StructField("cvec", ArrayType(DoubleType))))
+    // the set-up query: its one job fills the lazy checkpoint
+    var codebook: Seq[Row] = vecs.filter(col("vec_id") < k).collect().toSeq
 
     var prev: Option[(Long, Long)] = None
     var iters = 0
     var converged = false
-    // NOT an InterpretedLoop scope: the E-step's vecs × centroids
-    // cross-score dominates every round, and codegen'd plumbing around
-    // the L2SqD kernel wins even at bench scale (r18 A/B: interpreted
-    // rounds cost q64 +0.2 s)
     while (iters < maxIter && !converged) {
-      // LAZY checkpoint of the E-step result: the checksum action fills
-      // the blocks, the M-step reads them back instead of re-running
-      // the broadcast cross-score. NOT persist+unpersist-per-round: the
-      // M-step `cents` is itself a lazy mark that only materializes in
-      // the NEXT round's checksum job — an assign cache released at the
-      // bottom of this round would be gone by then, silently re-paying
-      // the dominant E-step cost every round. Checkpointed blocks live
-      // exactly as long as a plan references them (ContextCleaner).
-      val assign = eStep().localCheckpoint(eager = false)
-      val sig = checksum(assign)
+      // an empty codebook assigns nothing: the round's signature is
+      // (0, 0) and so is the next codebook, no query needed
+      val (sig, next) =
+        if (codebook.isEmpty) ((0L, 0L), Seq.empty[Row]) else lloydRound(vecs, codebook, schema)
       if (prev.contains(sig)) converged = true
       else {
         prev = Some(sig)
-        cents = assign
-          .select(col("assigned").as("cluster"), posexplode(col("e")).as(Seq("pos", "v")))
-          .groupBy(col("cluster"), col("pos"))
-          .agg(round(avg(col("v")), 6).as("mean_v"))
-          .groupBy(col("cluster"))
-          .agg(expr("transform(sort_array(collect_list(struct(pos, mean_v))), s -> s.mean_v)").as("cvec"))
-          .localCheckpoint(eager = false)
+        codebook = next
         iters += 1
       }
     }
-    (cents, iters)
+    (spark.createDataFrame(java.util.Arrays.asList(codebook: _*), schema), iters)
+  }
+
+  /** One E+M round over a non-empty `codebook`: returns the assignment's
+    * (count, xor) signature and the next codebook, sorted by cluster. */
+  private def lloydRound(vecs: DataFrame, codebook: Seq[Row],
+                         schema: StructType): ((Long, Long), Seq[Row]) = {
+    val cb = GraftColumnBridge.column(Literal.create(codebook, ArrayType(schema, containsNull = false)))
+    // native squared-L2 kernel — same left-to-right (x−y)² fold order
+    // as the retired aggregate(zip_with) HOF
+    val nearest = transform(cb, c => struct(
+      GraftColumnBridge.column(graft.functions.L2SqD(
+        GraftColumnBridge.catalystExpression(col("e")),
+        GraftColumnBridge.catalystExpression(c.getField("cvec")))).as("d2"),
+      c.getField("cluster").as("cluster")))
+    // posexplode_outer keeps empty and null vectors (one row, pos null)
+    // in the checksum; `first` marks one row per vector
+    val first = coalesce(col("pos"), lit(0)) === 0
+    val rows = vecs
+      .select(col("vec_id"), col("e"), array_min(nearest).getField("cluster").as("assigned"))
+      .select(col("vec_id"), col("assigned"), posexplode_outer(col("e")).as(Seq("pos", "v")))
+      .groupBy(col("assigned"), col("pos"))
+      .agg(round(avg(col("v")), 6),
+        count(when(first, lit(1))),
+        bit_xor(when(first, xxhash64(col("vec_id"), col("assigned")))))
+      .collect()
+    val sig = (rows.map(_.getLong(3)).sum,
+      rows.foldLeft(0L)((x, r) => if (r.isNullAt(4)) x else x ^ r.getLong(4)))
+    val next = rows.filterNot(_.isNullAt(1)).groupBy(_.get(0)).toSeq.map { case (cluster, cells) =>
+      val means = new Array[Any](cells.map(_.getInt(1)).max + 1)
+      cells.foreach(r => means(r.getInt(1)) = r.get(2))
+      Row(cluster, means.toSeq)
+    }.sortBy(_.getAs[Number](0).longValue)
+    (sig, next)
   }
 }

@@ -146,13 +146,16 @@ private[queries] trait LlmIterativeQueries extends LlmShared {
     FROM assign GROUP BY label, assigned ORDER BY label, assigned"""
 
   /** Iterated k-means TRAINING — the full Lloyd's loop over q60's M-step
-    * and q61's E-step, run by [[graft.ops.KMeans]] with per-round
-    * broadcast codebooks, one hash aggregate per step, and an O(1)
-    * convergence checksum (assignment count + bit_xor(xxhash64)) — the
-    * q41 driver-loop pattern. Fixed at 2 iterations with the
-    * deterministic `vec_id < 8` init so the DuckDB oracle can unroll the
-    * same two E/M rounds as CTEs and hash-match exactly (6dp-rounded
-    * centroids, sequential IEEE folds, (d2, cluster) tie-breaks). */
+    * and q61's E-step, run by [[graft.ops.KMeans]] as one Spark query per
+    * round: the nearest centroid is a map-side column against the
+    * codebook literal, and one (cluster, pos) aggregate gives both the
+    * M-step means and the convergence checksum (assignment count +
+    * bit_xor(xxhash64)); only k×dim rows reach the driver, and the
+    * trained codebook comes back as a local relation. Fixed at 2
+    * iterations with the deterministic `vec_id < 8` init so the DuckDB
+    * oracle can unroll the same two E/M rounds as CTEs and hash-match
+    * exactly (6dp-rounded centroids, sequential IEEE folds, (d2, cluster)
+    * tie-breaks). */
   private[queries] def kmeansTrain(s: SparkSession, dir: String): DataFrame = {
     val s2 = embs(s, dir)
     val emb = s2.sql(
@@ -295,7 +298,10 @@ private[queries] trait LlmIterativeQueries extends LlmShared {
     * sides run exactly 4 M-steps — equal either way (KMeansSpec pins the
     * fixpoint property). Scale shape: identical to q62 — codebook
     * broadcast twice (cell assignment + probe), search joins on the cell
-    * key, never all-pairs — plus the q64 training loop up front. */
+    * key, never all-pairs — plus the q64 training loop up front. The
+    * loop runs while this DataFrame is built (one set-up job that reads
+    * the vectors, then one query per round) and leaves the codebook as a
+    * local relation, so the search plan scans no training state. */
   private[queries] def ivfConverged(s: SparkSession, dir: String): DataFrame = {
     val s2 = embs(s, dir)
     val emb = s2.sql(

@@ -28,7 +28,7 @@ class KqlCompilerSpec extends AnyFunSuite with BeforeAndAfterAll {
       (5L, "beta", 70.0, "ok"))
       .toDF("id", "name", "value", "status")
   }
-  private def run(kql: String) = KqlCompiler.compile(kql, _ => df)
+  private def run(kql: String) = ExprBudget.check(KqlCompiler.compile(kql, _ => df))
 
   test("count yields KQL's Count column") {
     val out = run("t | count").collect()
@@ -2126,7 +2126,11 @@ class KqlCompilerSpec extends AnyFunSuite with BeforeAndAfterAll {
         |  i1 = indexof('hello world hello', 'hello', 3),
         |  i2 = indexof('hello world hello', 'hello', 0, -1, 2),
         |  i3 = indexof('hello world hello', 'hello', 0, 8),
-        |  i4 = indexof('abc', 'z', 0)""".stripMargin).head()
+        |  i4 = indexof('abc', 'z', 0),
+        |  i5 = indexof(strrep('ab', 20), 'ab', 0, -1, 18),
+        |  i6 = indexof('hello', 'l', 0, -1, 3),
+        |  i7 = isnull(indexof('hello', 'l', -1)),
+        |  i8 = indexof('hello world hello', 'hello', 1, 15)""".stripMargin).head()
     assert(r.getLong(0) >= 0 && r.getLong(0) < 100, "hash mod stays in [0, mod)")
     assert(r.getString(1) == "1,2,3,4,5" && r.getString(2) == "0,5,10", "range stop is inclusive")
     assert(r.getString(3) == """[["1","a"],["2","b"]]""", "heterogeneous zip coerces to strings")
@@ -2135,6 +2139,10 @@ class KqlCompilerSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(r.getLong(7) == 12L, "occurrence=2 finds the second match")
     assert(r.getLong(8) == 0L, "window [0,8) still contains the first match")
     assert(r.getLong(9) == -1L)
+    assert(r.getLong(10) == 34L, "no occurrence cap: the 18th match")
+    assert(r.getLong(11) == -1L, "fewer matches than the occurrence asked for")
+    assert(r.getBoolean(12), "negative start is null")
+    assert(r.getLong(13) == -1L, "a match must end inside the window [start, start + length)")
   }
 
   test("mv-expand aliased expression form") {

@@ -274,7 +274,7 @@ class KqlFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
     for (i <- 0 until fuzzN) {
       val (kql, maxRows) = genPipeline()
       try {
-        val out = KqlCompiler.compile(kql, _ => df)
+        val out = ExprBudget.check(KqlCompiler.compile(kql, _ => df))
         val rows = out.collect()
         assert(out.schema.fields.nonEmpty)
         assert(rows.length <= maxRows,
