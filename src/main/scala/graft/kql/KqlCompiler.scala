@@ -177,17 +177,33 @@ object KqlCompiler {
     * evaluate against `now` — Kusto semantics (now() is FIXED for the
     * duration of one query, not re-evaluated per row), and the hook that
     * makes time-relative queries deterministic for tests/oracles. */
-  def compile(kql: String, resolve: String => DataFrame, now: java.time.Instant): DataFrame = {
-    retirePendingMaterialize(org.apache.spark.sql.SparkSession.getActiveSession)
-    val p = new Parser(Lexer.tokens(kql), resolve, now, None)
+  def compile(kql: String, resolve: String => DataFrame, now: java.time.Instant): DataFrame =
+    compileWith(kql, resolve, now, None, localGraph = true)((_, df) => (Seq(df), df))
+
+  /** The one compile lifecycle behind every entry point: retire the
+    * session's previous never-executed materialize generation (on
+    * `spark`, else the thread's active session), parse the whole text
+    * with `spark` as the session hint, log the warnings, and arm the
+    * query-duration release of the materialized frames on the results
+    * `outputs` picks; `outputs` also gives the value returned. The
+    * compile's probe caches are always released, and the materialized
+    * frames too when the compile fails. */
+  private def compileWith[A](kql: String, resolve: String => DataFrame,
+                             now: java.time.Instant,
+                             spark: Option[org.apache.spark.sql.SparkSession],
+                             localGraph: Boolean)(
+      outputs: (Parser, DataFrame) => (Seq[DataFrame], A)): A = {
+    retirePendingMaterialize(spark.orElse(org.apache.spark.sql.SparkSession.getActiveSession))
+    val p = new Parser(Lexer.tokens(kql), resolve, now, spark, localGraph)
     var ok = false
     try {
       val df = p.statements()
       p.expectEnd()
       logWarnings(p)
-      armMaterializeRelease(p.materializedFrames.toSeq, Seq(df))
+      val (armed, out) = outputs(p, df)
+      armMaterializeRelease(p.materializedFrames.toSeq, armed)
       ok = true
-      df
+      out
     } finally {
       p.releaseProbeCaches()
       if (!ok) p.materializedFrames.foreach(_.unpersist(blocking = false))
@@ -205,22 +221,9 @@ object KqlCompiler {
   def compileWithWarnings(kql: String, resolve: String => DataFrame,
                           now: java.time.Instant = java.time.Instant.now(),
                           spark: Option[org.apache.spark.sql.SparkSession] = None)
-      : (DataFrame, Seq[String]) = {
-    retirePendingMaterialize(spark.orElse(org.apache.spark.sql.SparkSession.getActiveSession))
-    val p = new Parser(Lexer.tokens(kql), resolve, now, spark)
-    var ok = false
-    try {
-      val df = p.statements()
-      p.expectEnd()
-      logWarnings(p)
-      armMaterializeRelease(p.materializedFrames.toSeq, Seq(df))
-      ok = true
-      (df, p.warnings.toSeq)
-    } finally {
-      p.releaseProbeCaches()
-      if (!ok) p.materializedFrames.foreach(_.unpersist(blocking = false))
-    }
-  }
+      : (DataFrame, Seq[String]) =
+    compileWith(kql, resolve, now, spark, localGraph = true)(
+      (p, df) => (Seq(df), (df, p.warnings.toSeq)))
 
   /** Compile with an explicit session — required only when the query
     * STARTS from a table generator (`range`/`print`/`datatable`) and no
@@ -231,22 +234,8 @@ object KqlCompiler {
     * the parity reference. */
   def compile(kql: String, resolve: String => DataFrame, now: java.time.Instant,
               spark: org.apache.spark.sql.SparkSession,
-              localGraph: Boolean = true): DataFrame = {
-    retirePendingMaterialize(Some(spark))
-    val p = new Parser(Lexer.tokens(kql), resolve, now, Some(spark), localGraph)
-    var ok = false
-    try {
-      val df = p.statements()
-      p.expectEnd()
-      logWarnings(p)
-      armMaterializeRelease(p.materializedFrames.toSeq, Seq(df))
-      ok = true
-      df
-    } finally {
-      p.releaseProbeCaches()
-      if (!ok) p.materializedFrames.foreach(_.unpersist(blocking = false))
-    }
-  }
+              localGraph: Boolean = true): DataFrame =
+    compileWith(kql, resolve, now, Some(spark), localGraph)((_, df) => (Seq(df), df))
 
   /** Convenience: resolve tables as session temp views. */
   def compile(spark: org.apache.spark.sql.SparkSession, kql: String): DataFrame =
@@ -262,23 +251,11 @@ object KqlCompiler {
   def compileMulti(kql: String, resolve: String => DataFrame,
                    now: java.time.Instant = java.time.Instant.now(),
                    spark: Option[org.apache.spark.sql.SparkSession] = None)
-      : Seq[(String, DataFrame)] = {
-    retirePendingMaterialize(spark.orElse(org.apache.spark.sql.SparkSession.getActiveSession))
-    val p = new Parser(Lexer.tokens(kql), resolve, now, spark)
-    var ok = false
-    try {
-      val df = p.statements()
-      p.expectEnd()
-      logWarnings(p)
+      : Seq[(String, DataFrame)] =
+    compileWith(kql, resolve, now, spark, localGraph = true) { (p, df) =>
       val out = if (p.multiOut.isEmpty) Seq("result" -> df) else p.multiOut.toSeq
-      armMaterializeRelease(p.materializedFrames.toSeq, out.map(_._2))
-      ok = true
-      out
-    } finally {
-      p.releaseProbeCaches()
-      if (!ok) p.materializedFrames.foreach(_.unpersist(blocking = false))
+      (out.map(_._2), out)
     }
-  }
 
   // ------------------------------------------------------------- lexer
 
@@ -843,63 +820,58 @@ object KqlCompiler {
             graft.ops.LocalGraph.bfsShortestPaths(
               g.edges, lIn, lOut, sources, maxHops, mode == "any")
           } else None
-        // interpreted-loop scope: every plan inside executes ONCE per
-        // compile, so on a small graph janino costs more than it saves
-        // (InterpretedLoop scaladoc has the q146 A/B); the final result
-        // plan is assembled AFTER the scope and keeps codegen
-        lazy val (perLevel, reachedCnt0) = graft.ops.InterpretedLoop.runIfSmall(
-            g.edges.sparkSession, graft.ops.SizeGate.small(g.edges)) {
-        val srcCnt = sources.count() // materializes the node cache too
-        val sSide = maybeBcast(sources, srcCnt)
-        var frontier = dedupAny(
-          sSide.join(edges, sSide("__bfs_src") === edges("__bfs_in"))
-            .select(sSide("__bfs_src"), sSide("__bfs_a"),
-              edges("__bfs_out").as("__bfs_cur"),
-              array(edges("__bfs_edge")).as("__bfs_path"),
-              array(sSide("__bfs_src").cast("string"),
-                    edges("__bfs_out").cast("string"),
-                    edges("__bfs_ekey")).as("__bfs_sig")))
-          .localCheckpoint(eager = false) // the count below materializes it
-        var frontierCnt = frontier.count()
-        var settled = frontier.select(col("__bfs_src"), col("__bfs_cur"))
-          .distinct().localCheckpoint(eager = false)
-        var settledCnt = frontierCnt // upper bound; exact enough for the hint
-        val perLevel = scala.collection.mutable.Buffer[DataFrame](frontier)
-        var reachedCnt = frontierCnt
-        var lvl = 1
-        while (lvl < maxHops && frontierCnt > 0) {
-          val fSide = maybeBcast(frontier, frontierCnt)
-          val ext = fSide.join(edges, fSide("__bfs_cur") === edges("__bfs_in"))
-            .select(fSide("__bfs_src"), fSide("__bfs_a"),
-              edges("__bfs_out").as("__bfs_cur"),
-              concat(fSide("__bfs_path"), array(edges("__bfs_edge"))).as("__bfs_path"),
-              concat(fSide("__bfs_sig"),
-                array(fSide("__bfs_cur").cast("string"),
+        lazy val (perLevel, reachedCnt0) = {
+          val srcCnt = sources.count() // materializes the node cache too
+          val sSide = maybeBcast(sources, srcCnt)
+          var frontier = dedupAny(
+            sSide.join(edges, sSide("__bfs_src") === edges("__bfs_in"))
+              .select(sSide("__bfs_src"), sSide("__bfs_a"),
+                edges("__bfs_out").as("__bfs_cur"),
+                array(edges("__bfs_edge")).as("__bfs_path"),
+                array(sSide("__bfs_src").cast("string"),
                       edges("__bfs_out").cast("string"),
-                      edges("__bfs_ekey"))).as("__bfs_sig"))
-          // lazy marks: the per-level count (the loop's one driver probe)
-          // materializes the checkpointed frontier in the SAME job — one
-          // job launch per level instead of three (round-15 discipline)
-          val fresh = dedupAny(
-            ext.join(maybeBcast(settled, settledCnt),
-              Seq("__bfs_src", "__bfs_cur"), "left_anti"))
-            .localCheckpoint(eager = false)
-          frontierCnt = fresh.count()
-          // settled tracks PAIRS: for output=all the frontier carries one
-          // row per shortest path, so dedupe before the union or the
-          // settled set (and its broadcast-size estimate) grows with path
-          // multiplicity instead of pair count
-          val freshPairs =
-            if (mode == "any") fresh.select(col("__bfs_src"), col("__bfs_cur"))
-            else fresh.select(col("__bfs_src"), col("__bfs_cur")).distinct()
-          settled = settled.union(freshPairs).localCheckpoint(eager = false)
-          settledCnt += (if (mode == "any") frontierCnt else freshPairs.count())
-          reachedCnt += frontierCnt
-          perLevel += fresh
-          frontier = fresh
-          lvl += 1
-        }
-        (perLevel, reachedCnt)
+                      edges("__bfs_ekey")).as("__bfs_sig")))
+            .localCheckpoint(eager = false) // the count below materializes it
+          var frontierCnt = frontier.count()
+          var settled = frontier.select(col("__bfs_src"), col("__bfs_cur"))
+            .distinct().localCheckpoint(eager = false)
+          var settledCnt = frontierCnt // upper bound; exact enough for the hint
+          val perLevel = scala.collection.mutable.Buffer[DataFrame](frontier)
+          var reachedCnt = frontierCnt
+          var lvl = 1
+          while (lvl < maxHops && frontierCnt > 0) {
+            val fSide = maybeBcast(frontier, frontierCnt)
+            val ext = fSide.join(edges, fSide("__bfs_cur") === edges("__bfs_in"))
+              .select(fSide("__bfs_src"), fSide("__bfs_a"),
+                edges("__bfs_out").as("__bfs_cur"),
+                concat(fSide("__bfs_path"), array(edges("__bfs_edge"))).as("__bfs_path"),
+                concat(fSide("__bfs_sig"),
+                  array(fSide("__bfs_cur").cast("string"),
+                        edges("__bfs_out").cast("string"),
+                        edges("__bfs_ekey"))).as("__bfs_sig"))
+            // lazy marks: the per-level count (the loop's one driver probe)
+            // materializes the checkpointed frontier in the SAME job — one
+            // job launch per level instead of three (round-15 discipline)
+            val fresh = dedupAny(
+              ext.join(maybeBcast(settled, settledCnt),
+                Seq("__bfs_src", "__bfs_cur"), "left_anti"))
+              .localCheckpoint(eager = false)
+            frontierCnt = fresh.count()
+            // settled tracks PAIRS: for output=all the frontier carries one
+            // row per shortest path, so dedupe before the union or the
+            // settled set (and its broadcast-size estimate) grows with path
+            // multiplicity instead of pair count
+            val freshPairs =
+              if (mode == "any") fresh.select(col("__bfs_src"), col("__bfs_cur"))
+              else fresh.select(col("__bfs_src"), col("__bfs_cur")).distinct()
+            settled = settled.union(freshPairs).localCheckpoint(eager = false)
+            settledCnt += (if (mode == "any") frontierCnt else freshPairs.count())
+            reachedCnt += frontierCnt
+            perLevel += fresh
+            frontier = fresh
+            lvl += 1
+          }
+          (perLevel, reachedCnt)
         }
         // cache lifetime: edges/nodes ride the materialize() MatGen
         // machinery (registered above), so the endpoint bind below reads

@@ -256,10 +256,6 @@ object Bpe {
     val merges = List.newBuilder[Merge]
     var round = 0
     var done = false
-    // interpreted-loop scope (see InterpretedLoop): each merge round is
-    // one head(1) action over the CAPPED word-stats table - tiny data,
-    // fresh plan per round, so per-round codegen dominates
-    InterpretedLoop.runIfSmall(spark, SizeGate.small(wf)) {
     while (round < k && !done) {
       val top = words
         .flatMap(ws => ws.syms.iterator.sliding(2).withPartial(false)
@@ -277,7 +273,6 @@ object Bpe {
           .localCheckpoint(eager = false)
       }
       round += 1
-    }
     }
     merges.result()
   }

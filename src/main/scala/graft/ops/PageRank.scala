@@ -83,10 +83,6 @@ object PageRank {
     var ranks = nodes.withColumn("rank", lit(1.0 / n)).localCheckpoint(eager = false)
     var iters = 0
     var converged = false
-    // NOT an InterpretedLoop scope: every PageRank round scans the FULL
-    // edge relation (unlike the frontier-bounded BFS levels), so codegen
-    // pays for itself even on bench-scale graphs (r18 A/B: interpreted
-    // rounds cost q111 +0.3 s)
     while (iters < k && !converged) {
       val contrib = e.join(ranks, e("src") === ranks("node"))
         .select(col("dst").as("node"), (col("rank") / col("od")).as("c"))

@@ -3,8 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, Row}
 
 /** The one size gate in front of every driver-local kernel (BPE merge
-  * loop, LPA, weak/strong components, frontier BFS) and every
-  * interpreted-loop scope ([[InterpretedLoop.runIfSmall]]).
+  * loop, LPA, weak/strong components, frontier BFS).
   *
   * A relation is small when the SUM of Catalyst's size estimates over
   * the LEAF relations of its optimized plan is ≤ [[MaxBytes]]. This errs

@@ -83,10 +83,6 @@ object StronglyConnected {
     var eAct = e0
     val parts = scala.collection.mutable.Buffer.empty[DataFrame]
     var round = 0
-    // interpreted-loop scope: every per-round plan executes once, so on
-    // a small graph janino costs more than it saves (see
-    // InterpretedLoop); the caller's result plan keeps codegen
-    graft.ops.InterpretedLoop.run(e0) {
     while (active.count() > 0) {
       round += 1
       if (round > MaxRounds)
@@ -132,7 +128,6 @@ object StronglyConnected {
         .join(active.select(F.col("node").as("src")), Seq("src"), "left_semi")
         .join(active.select(F.col("node").as("dst")), Seq("dst"), "left_semi")
         .localCheckpoint(eager = false)
-    }
     }
     e0.unpersist()
     // edge-free graph: no endpoints, empty (node, comp) result with the

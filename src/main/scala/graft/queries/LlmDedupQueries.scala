@@ -265,10 +265,6 @@ private[queries] trait LlmDedupQueries extends LlmShared {
     var sig = checksum(edges)
     var rounds = 0
     var converged = sig._1 == 0L
-    // NOT an InterpretedLoop scope: every star-contraction round
-    // rewrites the FULL edge set (unlike frontier-bounded BFS levels),
-    // so codegen pays for itself (r18 A/B: interpreted rounds cost q41
-    // +0.3 s)
     while (!converged) {
       val next = smallStar(largeStar(edges)).localCheckpoint(eager = false)
       rounds += 1

@@ -554,13 +554,7 @@ private[queries] trait LlmIterativeQueries extends LlmShared {
     locally {
       // lazy round checkpoints: the final aggregate's single action
       // materializes all three rounds with lineage cuts at each (the
-      // round-15 SCC/PageRank job-batching discipline). NOT an
-      // InterpretedLoop scope: this loop has no compile-time actions —
-      // the marked rounds execute at the caller's single action over the
-      // full edge relation, where interpreted eval costs more than the
-      // per-round janino it saves (r18 A/B: wrap ON 3.96 s vs OFF
-      // 3.60 s min) — the scope only pays off for frontier-bounded
-      // loops with in-compile probes (BFS/SCC/GD)
+      // round-15 SCC/PageRank job-batching discipline)
       var labels = nodes.join(broadcast(seeds), Seq("node"), "left")
         .select(col("node"), col("seed").as("label"),
           col("seed").isNotNull.as("clamped"))
@@ -725,9 +719,8 @@ private[queries] trait LlmIterativeQueries extends LlmShared {
     // corpus gets AQE-coalesced straight back to one partition (measured:
     // the md5 stage re-serialized behind a 1-task shuffle read), while an
     // explicit N is user-pinned and AQE leaves it alone
-    val small = graft.ops.SizeGate.small(s.table("documents"))
     val tokSrc =
-      if (small)
+      if (graft.ops.SizeGate.small(s.table("documents")))
         s"(SELECT /*+ REPARTITION(${s.sparkContext.defaultParallelism}, doc_id) */ doc_id, lang, text FROM documents)"
       else "documents"
     val fx = s.sql(s"""
@@ -752,10 +745,6 @@ private[queries] trait LlmIterativeQueries extends LlmShared {
       val nDocs = fx.select(countDistinct(col("doc_id"))).head.getLong(0).toDouble
       val w = Array.fill(ClsBuckets)(0.0)
       var b0 = 0.0
-      // interpreted-loop scope (see InterpretedLoop): one collect per
-      // round, each round's plan compiled once; gated on the documents
-      // input so cluster-scale corpora keep codegen
-      graft.ops.InterpretedLoop.runIfSmall(s, small) {
       for (_ <- 1 to ClsRounds) {
         val wArr = array(w.map(lit).toIndexedSeq: _*)
         val err = fx.groupBy(col("doc_id"))
@@ -776,7 +765,6 @@ private[queries] trait LlmIterativeQueries extends LlmShared {
           if (r.getLong(0) < 0) b0 -= ClsLr * r.getDouble(1)
           else w(r.getLong(0).toInt) -= ClsLr * r.getDouble(1) / nDocs
         }
-      }
       }
       import s.implicits._
       (w.toIndexedSeq.zipWithIndex.map { case (wv, b) => (b.toLong, wv) } :+ (-1L, b0))

@@ -11,13 +11,15 @@ import org.scalatest.funsuite.AnyFunSuite
   * `graft.*` system property or a `GRAFT_*` environment variable.
   * Deployment settings (`SPARK_GRAFT_*` env vars read by the
   * Bench/Verify/PerfAB mains) are not switches and stay allowed. Session
-  * conf and optimizer rules are written by `Graft.prepare` and a short
-  * list of scoped owners, never as a side effect of reading a table. */
+  * conf and optimizer rules are written by `Graft.prepare`, the LLM
+  * opt-ins in `registerFunctions` and `PerfAB`, never while a query is
+  * compiled or as a side effect of reading a table. */
 class AbSwitchGuardSpec extends AnyFunSuite {
   private val propRead =
     """(?:sys\.props|System\.getPropert(?:y|ies)|Boolean\.getBoolean|Integer\.getInteger|Long\.getLong)[\s\S]{0,40}?"graft\.""".r
   private val envName = """"GRAFT_""".r
-  private val sessionWrite = """\bconf\.(?:set|unset)\(|extraOptimizations\s*(?:\+\+)?=(?!=)""".r
+  private val sessionWrite =
+    """\bconf\.(?:set|unset)\(|\b(?:setConfString|unsetConf|withSQLConf)\(|extraOptimizations\s*(?:\+\+)?=(?!=)""".r
 
   private lazy val sources: Seq[Path] = {
     val root = Paths.get("src/main/scala")
@@ -49,11 +51,10 @@ class AbSwitchGuardSpec extends AnyFunSuite {
 
   test("src/main writes session conf and optimizer rules only from the allowed owners") {
     // file -> the lines it may write (engine policy; the LLM opt-ins in
-    // registerFunctions; the per-scope codegen flip; PerfAB variants)
+    // registerFunctions; PerfAB variants)
     val owners = Map(
       "Graft.scala" -> ".*".r,
       "LlmShared.scala" -> ".*(?:excludedRules|parallelismFirst).*".r,
-      "InterpretedLoop.scala" -> ".*".r,
       "PerfAB.scala" -> ".*".r)
     val found = offenders(Seq(sessionWrite), (f, src) =>
       owners.get(f.getFileName.toString).exists(_.matches(src)))

@@ -1771,6 +1771,67 @@ class KqlCompilerSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(eFil.map(_.getLong(0)).toSeq == Seq(2L))
   }
 
+  // An explicit `with` node table keeps shortest paths on the
+  // distributed BFS loop, whose per-level counts run while the query
+  // compiles.
+  private val withNodesBfs =
+    """let E = datatable(src: string, dst: string)[
+      |  'a', 'b', 'b', 'c', 'c', 'a', 'b', 'd', 'd', 'e'];
+      | let N = datatable(id: string, kind: string)[
+      |  'a', 'root', 'b', 'mid', 'c', 'mid', 'd', 'mid', 'e', 'leaf'];
+      | E | make-graph src --> dst with N on id
+      | | graph-shortest-paths (s)-[e*1..4]->(t)
+      |   project s = s.id, t = t.id, hops = array_length(e)
+      | | order by s asc, t asc""".stripMargin
+
+  test("graph-shortest-paths: the compile-time BFS loop leaves whole-stage codegen on in every job") {
+    // Every SQL job carries the session's SQL confs in its properties,
+    // so a loop that switched codegen off on the (shared) session shows
+    // here as "false"
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
+    val key = "spark.sql.codegen.wholeStage"
+    val sc = spark.sparkContext
+    org.apache.spark.ListenerBusDrain(sc)
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add(Option(e.properties).flatMap(p => Option(p.getProperty(key))).getOrElse("unset"))
+    }
+    sc.addSparkListener(listener)
+    val (compileJobs, out) = try {
+      val df = runG2(withNodesBfs)
+      org.apache.spark.ListenerBusDrain(sc)
+      (seen.size, df.collect())
+    } finally {
+      org.apache.spark.ListenerBusDrain(sc)
+      sc.removeSparkListener(listener)
+    }
+    assert(compileJobs > 0, "the BFS loop ran no job while compiling")
+    assert(out.map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSeq == Seq(
+      ("a", "a", 3L), ("a", "b", 1L), ("a", "c", 2L), ("a", "d", 2L), ("a", "e", 3L),
+      ("b", "a", 2L), ("b", "b", 3L), ("b", "c", 1L), ("b", "d", 1L), ("b", "e", 2L),
+      ("c", "a", 1L), ("c", "b", 2L), ("c", "c", 3L), ("c", "d", 3L), ("c", "e", 4L),
+      ("d", "e", 1L)))
+    val props = seen.asScala.toSeq
+    assert(!props.contains("false"), s"$key per job: ${props.mkString(", ")}")
+  }
+
+  test("graph-shortest-paths: a BFS and an ungated aggregate on one session at once match serial runs") {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    def bfs() = runG2(withNodesBfs).collect().map(_.toSeq).toSeq
+    def agg() = run("t | summarize n = count(), total = sum(value) by name | order by name asc")
+      .collect().map(_.toSeq).toSeq
+    val serial = (bfs(), agg())
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+    try for (_ <- 1 to 3) {
+      val both = Future(bfs()).zip(Future(agg()))
+      assert(Await.result(both, 2.minutes) == serial)
+    } finally pool.shutdown()
+  }
+
   test("graph-mark-components: weak components, min-id label, isolated nodes") {
     // two chains (a-b-c, d-e) + isolated node z (in the nodes table only)
     val out = runG2(
