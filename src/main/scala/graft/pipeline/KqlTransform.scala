@@ -1,10 +1,12 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, GraftColumnBridge}
-import org.apache.spark.sql.catalyst.expressions.{Alias, GetStructField, If, Literal, NamedExpression, Not, Or}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Alias, Expression, GetStructField, If, Literal, NamedExpression, Nondeterministic, Not, Or, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, SubqueryAlias}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** In-flight KQL transforms over a kafka-schema stream — the capability
   * the reference explicitly lacks: "The connector does not support
@@ -33,10 +35,21 @@ import org.apache.spark.sql.types.StructType
   * re-rooted onto one projection of the whole source (filters become
   * `NOT target OR c`, computed columns `IF(target, e, NULL)`, the value
   * `IF(target, to_json(…), value)`), so each batch reads its source and
-  * evaluates its projection once. Parse → row-wise ops → re-encode are
-  * all narrow (one codegen span, no shuffle), so the pipeline's
-  * linear-in-partitions scaling is preserved; at-least-once semantics
-  * are untouched because the stage is upstream of the offset-gated sink.
+  * evaluates its projection once.
+  *
+  * Parse once: the struct `__v = IF(target, from_json(value), NULL)` is
+  * computed in a projection of its own, and the KQL filters and the
+  * re-encode read its fields above it. The parse sits in a [[ParseOnce]]
+  * marker, because otherwise Catalyst pushes each filter below that
+  * projection and inlines `from_json` (and the source's own `value`
+  * expression) into it, parsing every target record twice. The executed
+  * plan is then: the source and `target` in one codegen stage, the parse
+  * as a plain projection (`from_json` is `CodegenFallback`, so it cannot
+  * join a codegen stage), and the filters, extends and re-encode in a
+  * second codegen stage. Every step is narrow (no shuffle), so the
+  * pipeline's linear-in-partitions scaling is preserved; at-least-once
+  * semantics are untouched because the stage is upstream of the
+  * offset-gated sink.
   */
 object KqlTransform {
 
@@ -55,7 +68,8 @@ object KqlTransform {
       coalesce(col("topic") === topic && col("value").isNotNull, lit(false)).as(TargetCol): _*)
 
     val parsed = base.filter(col(TargetCol))
-      .withColumn("__v", from_json(col("value").cast("string"), valueSchema))
+      .withColumn("__v", GraftColumnBridge.column(ParseOnce(
+        GraftColumnBridge.catalystExpression(from_json(col("value").cast("string"), valueSchema)))))
       .select(meta.map(col) ++ valueSchema.fieldNames.map(f => col(s"__v.$f").as(f)): _*)
     val transformed = graft.kql.KqlCompiler.compile(kql, _ => parsed)
     val missing = meta.filterNot(transformed.columns.contains)
@@ -106,4 +120,20 @@ object KqlTransform {
     GraftColumnBridge.ofRows(df.sparkSession,
       Project(metaOut :+ Alias(If(target, encoded.child, value), "value")(), carried(body)))
   }
+}
+
+/** Evaluates its child unchanged, once per row, where the plan computes
+  * it. Being nondeterministic, it keeps the optimizer from pushing a
+  * filter below the projection that holds it (`PushPredicateThroughNonJoin`)
+  * and from inlining it into the projection above (`CollapseProject`), so
+  * the parse it wraps runs once and filters read the parsed fields. The
+  * same idiom as `UserDefinedFunction.asNondeterministic`; needs no rule or
+  * strategy on the session. */
+private[pipeline] case class ParseOnce(child: Expression)
+    extends UnaryExpression with Nondeterministic with CodegenFallback {
+  override def dataType: DataType = child.dataType
+  override def nullable: Boolean = child.nullable
+  override protected def initializeInternal(partitionIndex: Int): Unit = ()
+  override protected def evalInternal(input: InternalRow): Any = child.eval(input)
+  override protected def withNewChildInternal(newChild: Expression): ParseOnce = copy(child = newChild)
 }

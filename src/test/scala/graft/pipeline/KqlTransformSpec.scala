@@ -111,6 +111,37 @@ class KqlTransformSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(sunk.size == rows(unionOracle(fixture.toDF(), "t", valueSchema, transforms.head)).size)
   }
 
+  test("the where stays above one parse: one from_json, the source's value once, the filter in codegen") {
+    import org.apache.spark.sql.catalyst.expressions.{JsonToStructs, Sha1}
+    import org.apache.spark.sql.execution.{FilterExec, InputAdapter, SparkPlan, WholeStageCodegenExec}
+    // a computed `value`, the shape of a generated kafka source; `sha1`
+    // appears in it and nowhere else, so it counts the value's copies
+    val h = pmod(xxhash64(col("id")), lit(4))
+    val level = element_at(array(lit("debug"), lit("info"), lit("warn")), (h + 1).cast("int"))
+    val src = spark.range(0, 400, 1, 4).select(
+      when(col("id") % 5 === 0, lit("other")).otherwise(lit("t")).as("topic"),
+      (col("id") % 4).cast("int").as("partition"), col("id").as("offset"), lit(null).cast("binary").as("key"),
+      when(h === 3, lit(null)).otherwise(to_json(struct(col("id").as("vlong"), level.as("vtype"),
+        sha1(col("id").cast("string")).as("note")))).cast("binary").as("value"))
+    val shaped = KqlTransform(src, "t", valueSchema, transforms.head)
+    val plan = shaped.queryExecution.executedPlan
+    def count(p: SparkPlan)(hit: PartialFunction[org.apache.spark.sql.catalyst.expressions.Expression, Unit]) =
+      p.collect { case n => n.expressions.map(_.collect(hit).size).sum }.sum
+    assert(count(plan) { case _: JsonToStructs => }  == 1, plan.treeString)
+    assert(count(plan) { case _: Sha1 => } == 1, plan.treeString)
+    // filters a codegen stage runs: its subtree down to its InputAdapters
+    def stage(p: SparkPlan): Seq[SparkPlan] = p match {
+      case _: InputAdapter => Nil
+      case f: FilterExec => f +: f.children.flatMap(stage)
+      case other => other.children.flatMap(stage)
+    }
+    val filters = plan.collect { case f: FilterExec => f }
+    val inCodegen = plan.collect { case w: WholeStageCodegenExec => stage(w.child) }.flatten
+    assert(filters.nonEmpty && filters.forall(f => inCodegen.exists(_ eq f)), plan.treeString)
+    // and the rows are still the two-branch union's
+    assert(rows(shaped) == rows(unionOracle(src, "t", valueSchema, transforms.head)))
+  }
+
   test("a transform that is not row-wise fails at construction") {
     import spark.implicits._
     val df = fixture.toDF().drop("key")

@@ -59,6 +59,9 @@ class PipelineE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
   private case class HRecord(topic: String, partition: Int, offset: Long,
                              key: Array[Byte], value: Array[Byte],
                              headers: Seq[(String, Array[Byte])])
+  // nullable coordinates, for the null-metadata cases
+  private case class NRecord(topic: String, partition: Option[Int], offset: Option[Long],
+                             key: Array[Byte], value: Array[Byte])
   private def jsonRec(topic: String, partition: Int, offset: Long, vtype: String, vlong: Long): KRecord =
     KRecord(topic, partition, offset, null,
       s"""{"vtype":"$vtype","vlong":$vlong}""".getBytes(UTF_8))
@@ -395,7 +398,8 @@ class PipelineE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
     val pipeline = new KustoSparkPipeline(cfg, () => new LocalTableIngestClient(tablesRoot),
       Some(() => new InMemoryDlq("e2e-hdr")), SinkMetrics.forSpark(spark))
 
-    val hdr = Seq("trace-id" -> "abc123".getBytes(UTF_8), "source" -> "svc-7".getBytes(UTF_8))
+    val hdr = Seq("trace-id" -> "abc123".getBytes(UTF_8), "source" -> "svc-7".getBytes(UTF_8),
+      "empty" -> null)
     val stream = MemoryStream[HRecord]
     stream.addData(Seq(
       HRecord("topicA", 0, 0, null, """{"vtype":"a","vlong":1}""".getBytes(UTF_8), hdr),
@@ -410,7 +414,132 @@ class PipelineE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(dlq.size == 1)
     val key = new String(dlq.get(0)._1, UTF_8)
     assert(key.contains("topic=ghost") && key.contains("offset=7"))
-    assert(key.contains("headers=[trace-id=abc123, source=svc-7]"), s"got: $key")
+    assert(key.contains("headers=[trace-id=abc123, source=svc-7, empty=]"), s"got: $key")
+  }
+
+  /** Runs one batch of `records` through a LOG-mode pipeline with a DLQ
+    * and a `*` mapping; returns the batch's failure (if any), what was
+    * dead-lettered, and the tables that received files. */
+  private def runNullable(name: String, records: Seq[NRecord]): (Option[Throwable], Seq[String], Seq[String]) = {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val tablesRoot = Files.createTempDirectory(s"e2e-$name").toString
+    val checkpoint = Files.createTempDirectory(s"ck-$name").toString
+    InMemoryDlq.reset(name)
+    val cfg = SinkConfig(
+      mappings = Seq(TableMapping("topicA", "db1", "tableA"), TableMapping("*", "db1", "catchall")),
+      flushSizeBytes = 150, flushIntervalMs = 0, maxRetryTimeMs = 20, retryBackoffMs = 10,
+      behaviorOnError = ErrorBehavior.Log, dlqTopic = Some("dlq-topic"),
+      tempDir = Files.createTempDirectory(s"e2e-stage-$name").toString)
+    val pipeline = new KustoSparkPipeline(cfg, () => new LocalTableIngestClient(tablesRoot),
+      Some(() => new InMemoryDlq(name)), SinkMetrics.forSpark(spark))
+    val stream = MemoryStream[NRecord]
+    stream.addData(records)
+    val q = pipeline.start(stream.toDF(), checkpoint)
+    val failure = try { q.processAllAvailable(); None } catch { case e: StreamingQueryException => Some(e) }
+    q.stop()
+    assert(failure.isDefined != Files.exists(java.nio.file.Path.of(checkpoint, "commits", "0")))
+    val db = new java.io.File(tablesRoot, "db1")
+    val tables = Option(db.list()).map(_.toSeq.sorted).getOrElse(Nil)
+    import scala.jdk.CollectionConverters._
+    (failure, InMemoryDlq.state(name).asScala.map(d => new String(d._1, UTF_8)).toSeq, tables)
+  }
+
+  private def messages(t: Throwable): String =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+
+  private val nullableValue = """{"vtype":"a","vlong":1}""".getBytes(UTF_8)
+
+  test("a null partition fails the batch, naming the column, even in LOG mode") {
+    val (failure, dlq, tables) = runNullable("null-partition",
+      Seq(NRecord("topicA", None, Some(3L), null, nullableValue)))
+    assert(failure.exists(f => messages(f).contains("null `partition`")), failure.map(messages))
+    assert(dlq.isEmpty && tables.isEmpty, s"routed anyway: dlq=$dlq tables=$tables")
+  }
+
+  test("a null offset fails the batch, naming the column, even in LOG mode") {
+    val (failure, dlq, tables) = runNullable("null-offset",
+      Seq(NRecord("topicA", Some(0), None, null, nullableValue)))
+    assert(failure.exists(f => messages(f).contains("null `offset`")), failure.map(messages))
+    assert(dlq.isEmpty && tables.isEmpty, s"routed anyway: dlq=$dlq tables=$tables")
+  }
+
+  test("a null topic has no mapping of its own: it routes through the '*' mapping") {
+    val (failure, dlq, tables) = runNullable("null-topic",
+      Seq(NRecord(null, Some(0), Some(5L), null, nullableValue)))
+    assert(failure.isEmpty && dlq.isEmpty && tables == Seq("catchall"), (failure.map(messages), dlq, tables))
+  }
+
+  test("one SQL execution and one job per micro-batch, and no plan deserializes rows") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import scala.jdk.CollectionConverters._
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val sc = spark.sparkContext
+    val tablesRoot = Files.createTempDirectory("e2e-exec").toString
+    val executions = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val jobExecutions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => executions.add(s.executionId)
+        case _ =>
+      }
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobExecutions.add(String.valueOf(e.properties.getProperty("spark.sql.execution.id")))
+    }
+    val planListener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = plans.add(qe.executedPlan.treeString)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = plans.add(qe.executedPlan.treeString)
+    }
+    def drained[T](body: => T): T = {
+      org.apache.spark.ListenerBusDrain(sc)
+      executions.clear(); jobExecutions.clear(); plans.clear()
+      val out = body
+      org.apache.spark.ListenerBusDrain(sc)
+      out
+    }
+    // one execution each, each execution ran exactly one job, and no
+    // executed plan turned rows into objects
+    def assertOneJobEach(n: Int): Unit = {
+      assert(executions.size == n, s"${executions.size} SQL executions for $n batches")
+      val byExecution = jobExecutions.asScala.groupBy(identity).view.mapValues(_.size).toMap
+      assert(byExecution == executions.asScala.map(id => id.toString -> 1).toMap, byExecution)
+      assert(!plans.asScala.exists(_.contains("DeserializeToObject")), plans.asScala.mkString("\n"))
+    }
+    sc.addSparkListener(listener)
+    spark.listenerManager.register(planListener) // before start: the stream's session copies it
+    try {
+      val pipeline = new KustoSparkPipeline(
+        newConfig(), () => new LocalTableIngestClient(tablesRoot), None, SinkMetrics.forSpark(spark))
+      val stream = MemoryStream[KRecord]
+      val q = pipeline.start(stream.toDF(), Files.createTempDirectory("ck-exec").toString)
+      try {
+        drained {
+          for (b <- 0 until 3) {
+            stream.addData((0 until 8).map(i => jsonRec("topicA", i % 4, b * 8 + i, "a", i)))
+            q.processAllAvailable()
+          }
+        }
+        assert(q.recentProgress.count(_.numInputRows > 0) == 3)
+        assertOneJobEach(3)
+      } finally q.stop()
+
+      // a direct batch-mode call is one SQL execution of its own
+      val batch = (0 until 8).map(i => jsonRec("topicA", 0, 100 + i, "a", i))
+        .map(r => (r.topic, r.partition, r.offset, r.key, r.value))
+        .toDF("topic", "partition", "offset", "key", "value")
+      drained(pipeline.processBatch(batch, 0L))
+      assertOneJobEach(1)
+      assert(plans.size == 1) // a named execution reaches QueryExecutionListeners
+      assert(spark.read.json(s"$tablesRoot/db1/tableA").count() == 32)
+    } finally {
+      sc.removeSparkListener(listener)
+      spark.listenerManager.unregister(planListener)
+    }
   }
 
   test("LOG mode with DLQ: unroutable records dead-letter instead of failing the batch") {
