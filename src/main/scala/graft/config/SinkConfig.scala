@@ -24,7 +24,8 @@ object ErrorBehavior {
 /** Engine sink configuration. Field semantics and defaults follow the
   * reference connector's public config surface
   * (reference: KustoSinkConfig.java:152-376; defaults :239-260 flush,
-  * :191-211 retry; attempt math :474-477).
+  * :191-211 retry). The attempt math (:474-477) is
+  * [[graft.ingest.RetryPolicy.maxAttempts]].
   *
   * All values are validated at construction — fail-fast before any
   * stream starts, mirroring the reference's config-time checks.
@@ -70,10 +71,6 @@ final case class SinkConfig(
       s"flush.interval.ms must be 0 or ≥ ${SinkConfig.MinFlushIntervalMs}, got $flushIntervalMs")
   EndpointValidator.validate(ingestUrl, "kusto.ingestion.url")
   EndpointValidator.validate(engineUrl, "kusto.query.url")
-
-  /** Max ingestion attempts: budget/backoff + 1 (the first try is free).
-    * Defaults ⇒ 300 s / 10 s + 1 = 31 attempts. */
-  def maxRetryAttempts: Int = (maxRetryTimeMs / math.max(retryBackoffMs, 1L)).toInt + 1
 
   def dlqEnabled: Boolean = dlqTopic.exists(_.nonEmpty)
 

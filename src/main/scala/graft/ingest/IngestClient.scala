@@ -51,8 +51,8 @@ final class PermanentIngestException(msg: String, cause: Throwable = null)
 
 /** The ingestion boundary. Implementations: a real Kusto client (HTTPS,
   * out of scope in this offline environment), [[MockIngestClient]] for
-  * tests, and [[ParquetIngestClient]] which lands staged files as rows in
-  * a local parquet "table" so end-to-end verification queries can run
+  * tests, and [[LocalTableIngestClient]] which lands each staged file in
+  * a local table directory so end-to-end verification queries can run
   * against what was ingested.
   */
 trait IngestClient extends Serializable with AutoCloseable {

@@ -113,7 +113,7 @@ private final class PartitionSink(
     val client = clientFactory()
     val dlq = dlqFactory.map(_())
     val retry = RetryPolicy(conf.maxRetryTimeMs, conf.retryBackoffMs, retrySleeper)
-    val writers = mutable.Map.empty[(String, Int), (RollingFileWriter, IngestPipe)]
+    val writers = mutable.Map.empty[(String, Int), RollingFileWriter]
     try {
       // F1 tombstone filter, per row: as a Catalyst filter it would be
       // pushed down and inlined into the source's projection, and a
@@ -133,7 +133,7 @@ private final class PartitionSink(
                 s"offset=${rec.offset}.${rec.headersDescription}").getBytes("UTF-8"), rec.value)
             }
           case Some(mapping) =>
-            val (writer, _) = writers.getOrElseUpdate((rec.topic, rec.partition), {
+            val writer = writers.getOrElseUpdate((rec.topic, rec.partition), {
               val target = IngestTarget(mapping.db, mapping.table, mapping.format,
                 mapping.mapping, mapping.streaming)
               val pipe = new IngestPipe(client, target, retry, conf.behaviorOnError, dlq, metrics)
@@ -142,19 +142,21 @@ private final class PartitionSink(
               // record (concatenated containers in one gzip are
               // unreadable; reference FileWriter.java:298-301,321-323)
               val isAvro = mapping.format == "avro" || mapping.format == "apacheavro"
-              val w = new RollingFileWriter(
+              new RollingFileWriter(
                 conf.tempDir, rec.topic, rec.partition,
                 FormatWriters.forFormat(mapping.format, mapping.valueSchema),
                 conf.flushSizeBytes, conf.flushIntervalMs,
                 pipe.handleRoll, retainRecords = conf.dlqEnabled && dlq.isDefined,
                 rollEveryRecord = isAvro && mapping.valueSchema.isEmpty)
-              (w, pipe)
             })
             try {
               writer.write(rec)
               metrics.recordsWritten.inc()
             } catch {
-              case e: IngestExhaustedException => throw e // ingest failures escalate regardless
+              // a failed roll (staging or ingest, retries and DLQ
+              // included) fails the partition in every error mode: its
+              // records were in the file, not in this write
+              case e: RollFailedException => throw e
               case e: Exception =>
                 // per-record write failure — error-mode switch (K4)
                 conf.behaviorOnError match {
@@ -176,10 +178,10 @@ private final class PartitionSink(
       // End of partition: flush residual files through ingest. A failure
       // here propagates and fails the batch — offsets must not advance
       // past data that never reached the sink.
-      writers.values.foreach { case (w, _) => w.close() }
+      writers.values.foreach(_.close())
     } catch {
       case e: Throwable =>
-        writers.values.foreach { case (w, _) => try w.abort() catch { case _: Exception => () } }
+        writers.values.foreach(w => try w.abort() catch { case _: Exception => () })
         throw e
     } finally {
       try client.close() catch { case _: Exception => () }

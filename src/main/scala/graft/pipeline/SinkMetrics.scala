@@ -1,6 +1,5 @@
 package graft.pipeline
 
-import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.util.LongAccumulator
@@ -60,9 +59,4 @@ object SinkMetrics {
   def local(): SinkMetrics =
     SinkMetrics(new AtomicCounter, new AtomicCounter, new AtomicCounter,
       new AtomicCounter, new AtomicCounter, new AtomicCounter)
-
-  /** Registry so local-mode tests can fetch the metrics a pipeline created. */
-  private val registry = new ConcurrentHashMap[String, SinkMetrics]
-  def register(id: String, m: SinkMetrics): SinkMetrics = { registry.put(id, m); m }
-  def get(id: String): Option[SinkMetrics] = Option(registry.get(id))
 }

@@ -2,7 +2,8 @@ package graft.sink
 
 import java.io.{BufferedOutputStream, File, FileOutputStream, OutputStream}
 import java.nio.file.{Files, Path}
-import java.util.{Timer, TimerTask, UUID}
+import java.util.UUID
+import java.util.concurrent.TimeUnit
 import java.util.zip.GZIPOutputStream
 
 /** A rolled (finished) staging file, handed to the ingest callback.
@@ -32,6 +33,14 @@ final class CountingOutputStream(under: OutputStream) extends OutputStream {
   override def close(): Unit = under.close()
 }
 
+/** A roll (staging or `onRoll`) failed. The writer is poisoned: this
+  * failure is thrown again by every later `write` and by `close()`, so
+  * the batch fails before offsets commit. It is not a per-record
+  * failure: the records it carried were in the file, not in the write
+  * that triggered the roll. */
+final class RollFailedException(msg: String, cause: Throwable)
+  extends IllegalStateException(msg, cause)
+
 /** Size-OR-time rolling gzip staging writer for one (topic, partition).
   *
   * This is the one behavior Spark does not provide declaratively
@@ -46,21 +55,20 @@ final class CountingOutputStream(under: OutputStream) extends OutputStream {
   * TopicPartitionWriter.java:85-89,235-242) — deterministic names make
   * retried ingests idempotent on the Kusto side and debuggable on disk.
   *
-  * Thread model: inside a Spark task a partition is single-threaded, but
-  * the flush timer fires on its own thread, so state transitions are
-  * `synchronized` (the reference uses a fair RW lock for the same race,
-  * reference: FileWriter.java:82-83,262). The writer monitor covers only
-  * file rotation — finished files are ENQUEUED under the monitor (so queue
-  * order is staging order is offset order) and the `onRoll` callback
-  * (which may run a long retrying ingest) drains the queue OUTSIDE it,
-  * serialized on a dedicated dispatch lock: whichever thread wins the lock
-  * dispatches in queue order and the loser finds an empty queue, so ingest
-  * order is offset order even when the timer and task threads race. A
-  * timer-flush failure is recorded under the dispatch lock and rethrown on
-  * the next write (reference: FileWriter.java:280-282) and, if no write
-  * follows, on `close()` — which barriers on the dispatch lock first, so a
-  * tail-of-partition timer failure still fails the batch before offsets
-  * commit.
+  * Thread model: one thread. A writer lives for one partition of one
+  * micro-batch, and a Spark task is single-threaded, so the writer
+  * starts no thread, takes no lock, and calls `onRoll` on the writing
+  * thread, in staging (= offset) order. The reference's flush timer and
+  * fair RW lock (reference: FileWriter.java:82-83,262) served a Connect
+  * writer that lives across many `put()` calls; here the time deadline
+  * is checked where the task is: `write` first rolls an open file whose
+  * age has reached `flushIntervalMs`, so the late record starts the next
+  * file, and `close()` rolls the residual. What this gives up: a file
+  * whose deadline passes while the task receives no rows rolls at the
+  * task's next row or at `close()`, not on a background thread; and a
+  * slow ingest of a time roll blocks the task thread, as a size roll's
+  * ingest already does. Offsets commit only after the batch returns, so
+  * neither changes what is committed.
   */
 final class RollingFileWriter(
     baseTempDir: String,
@@ -79,10 +87,14 @@ final class RollingFileWriter(
     p
   }
 
+  /** The file age that triggers a time roll; saturates, so a huge
+    * interval never rolls instead of overflowing. */
+  private val intervalNanos = TimeUnit.MILLISECONDS.toNanos(flushIntervalMs)
   private var out: CountingOutputStream = _
   private var gzip: GZIPOutputStream = _
   private var appender: RecordAppender = _
   private var file: File = _
+  private var openedAt = 0L
   private var numRecords = 0L
   /** Payload bytes handed to the appender. Block-buffering appenders
     * (Avro containers) hold bytes until a ~64 KB block completes, so
@@ -92,140 +104,61 @@ final class RollingFileWriter(
   private var firstOffset = -1L
   private var lastOffset = -1L
   private var retained = List.empty[SinkRecord]
-  private var timer: Timer = _
-  private var flushError: String = _
+  private var failure: RollFailedException = _
   private var stopped = false
 
-  /** Number of rolled files (for tests/metrics). */
-  var rolledFiles: Long = 0L
-
-  def isDirty: Boolean = synchronized { out != null && (out.count > 0 || rawAppended > 0) }
+  def isDirty: Boolean = out != null && (out.count > 0 || rawAppended > 0)
 
   def filePath(offset: Long): String =
     dir.resolve(s"kafka_${topic}_${partition}_$offset.${provider.ext}.gz").toString
 
   def write(r: SinkRecord): Unit = {
-    synchronized {
-      if (flushError != null) throw new IllegalStateException(flushError)
-      if (stopped) throw new IllegalStateException("writer is stopped")
-      if (r == null) return
-      if (out == null) openFile(r.offset)
-      appender.append(r)
-      if (r.value != null) rawAppended += r.value.length
-      if (retainRecords) retained ::= r
-      numRecords += 1
-      lastOffset = r.offset
-      if (flushIntervalMs == 0 || math.max(out.count, rawAppended) > flushSizeBytes || rollEveryRecord)
-        finishLocked()
-    }
-    drainDispatch(barrier = false)
+    if (failure != null) throw failure
+    if (stopped) throw new IllegalStateException("writer is stopped")
+    if (r == null) return
+    if (out != null && System.nanoTime() - openedAt >= intervalNanos)
+      rollOrDiscard()
+    if (out == null) openFile(r.offset)
+    appender.append(r)
+    if (r.value != null) rawAppended += r.value.length
+    if (retainRecords) retained ::= r
+    numRecords += 1
+    lastOffset = r.offset
+    if (flushIntervalMs == 0 || math.max(out.count, rawAppended) > flushSizeBytes || rollEveryRecord)
+      finish()
   }
 
   private def openFile(offset: Long): Unit = {
     file = new File(filePath(offset))
     firstOffset = offset
+    openedAt = System.nanoTime()
     val fileStream = new BufferedOutputStream(new FileOutputStream(file))
     gzip = new GZIPOutputStream(fileStream)
     out = new CountingOutputStream(gzip)
     appender = provider.open(out)
-    armTimer()
   }
 
-  private def armTimer(): Unit = {
-    if (flushIntervalMs > 0) {
-      if (timer != null) timer.cancel()
-      timer = new Timer(true)
-      timer.schedule(new TimerTask {
-        def run(): Unit = flushByTime()
-      }, flushIntervalMs)
-    }
-  }
+  private def rollOrDiscard(): Unit = if (isDirty) finish() else discardOpenFile()
 
-  private def flushByTime(): Unit = {
-    val fileName = synchronized { if (file == null) "[no file]" else file.getName }
-    try {
-      synchronized { if (!stopped && isDirty) finishLocked() }
-      drainDispatch(barrier = false)
-    } catch {
-      case e: Exception => // drainDispatch already recorded it; staging errors recorded here
-        synchronized {
-          if (flushError == null)
-            flushError = s"Error in timed flush of $fileName: ${e.getMessage}"
-        }
-    }
-  }
-
-  /** Finish the current file and hand it to `onRoll`. No-op if clean. */
-  def roll(): Unit = {
-    synchronized {
-      if (out == null || (out.count == 0 && rawAppended == 0)) discardOpenFile()
-      else finishLocked()
-    }
-    drainDispatch(barrier = true)
-  }
-
-  /** Closes out the current file under the monitor and enqueues it for
-    * dispatch. Staging happens only under the monitor, so queue order IS
-    * offset order — whichever thread drains next preserves it. */
-  private def finishLocked(): Unit = {
-    appender.close()
-    gzip.finish()
-    out.close()
-    pending.addLast(StagedFile(file.getPath, numRecords, out.count, firstOffset, lastOffset, retained.reverse))
+  /** Closes out the current file and hands it to `onRoll`, then deletes
+    * it: staging is transient, and ingest has consumed or replayed it. */
+  private def finish(): Unit = {
+    val staged = try {
+      appender.close()
+      gzip.finish()
+      out.close()
+      StagedFile(file.getPath, numRecords, out.count, firstOffset, lastOffset, retained.reverse)
+    } catch { case e: Exception => poison(s"Error staging ${file.getPath}", e) }
     resetState()
-    rolledFiles += 1
+    try {
+      try onRoll(staged)
+      finally Files.deleteIfExists(Path.of(staged.path))
+    } catch { case e: Exception => poison(s"Error dispatching ${staged.path}", e) }
   }
 
-  /** Staged files awaiting ingest, FIFO in staging (= offset) order.
-    * Guarded by the writer monitor; drained under `dispatchLock`. */
-  private val pending = new java.util.ArrayDeque[StagedFile]()
-
-  /** Runs the roll callback outside the writer monitor, serialized on
-    * `dispatchLock` so files reach ingest strictly in queue (offset)
-    * order even when the timer thread and the task thread race — the
-    * loser of the lock returns and the winner drains everything. A
-    * dispatch failure is recorded in `flushError` BEFORE the lock is
-    * released, so a `close()` that barriers on `dispatchLock` is
-    * guaranteed to observe it. Plain `write()`s that stage nothing see an
-    * empty queue and never touch the lock, so they proceed concurrently
-    * with a long-running timer ingest. */
-  private val dispatchLock = new java.util.concurrent.locks.ReentrantLock
-
-  /** `barrier = true` (roll/close) blocks until the lock is acquired —
-    * guaranteeing any in-flight dispatch on another thread has completed
-    * (and recorded its error) before returning. `barrier = false`
-    * (write/timer) is opportunistic: if another thread holds the lock it
-    * returns immediately — that holder re-checks the queue after
-    * releasing (the loop below), so an enqueue that lost `tryLock` is
-    * never stranded: enqueue happens-before the failed tryLock, which
-    * happens-before the holder's unlock and its queue re-check. */
-  private def drainDispatch(barrier: Boolean): Unit = {
-    if (barrier) {
-      dispatchLock.lock()
-      try drainLocked() finally dispatchLock.unlock()
-    }
-    while (synchronized { !pending.isEmpty }) {
-      if (!dispatchLock.tryLock()) return
-      try drainLocked() finally dispatchLock.unlock()
-    }
-  }
-
-  /** Dispatch queued files in FIFO order. Caller must hold dispatchLock. */
-  private def drainLocked(): Unit = {
-    var next = synchronized { pending.pollFirst() }
-    while (next != null) {
-      try {
-        try onRoll(next)
-        finally Files.deleteIfExists(Path.of(next.path)) // staging is transient; ingest has consumed or replayed it
-      } catch {
-        case e: Exception =>
-          synchronized {
-            if (flushError == null) flushError = s"Error dispatching ${next.path}: ${e.getMessage}"
-          }
-          throw e
-      }
-      next = synchronized { pending.pollFirst() }
-    }
+  private def poison(what: String, e: Exception): Nothing = {
+    failure = new RollFailedException(s"$what: ${e.getMessage}", e)
+    throw failure
   }
 
   private def discardOpenFile(): Unit = {
@@ -236,27 +169,15 @@ final class RollingFileWriter(
   private def resetState(): Unit = {
     out = null; gzip = null; appender = null; file = null
     numRecords = 0; rawAppended = 0; firstOffset = -1; lastOffset = -1; retained = Nil
-    if (timer != null) { timer.cancel(); timer = null }
   }
 
-  /** Flush any residual open file through `onRoll`, then stop. A pending
-    * timer-flush error is rethrown here so a failure on the last file of a
-    * partition (with no subsequent write to surface it) still fails the
-    * batch before offsets commit. */
+  /** Roll any residual open file through `onRoll`, then stop. After a
+    * failed roll this throws that failure, so a failure on the last file
+    * of a partition still fails the batch before offsets commit. */
   def close(): Unit = {
-    synchronized {
-      if (isDirty) finishLocked() else discardOpenFile()
-      stopped = true
-      if (timer != null) { timer.cancel(); timer = null }
-    }
-    // Drains the residual file AND anything the timer staged but has not
-    // dispatched yet; acquiring dispatchLock doubles as a barrier for an
-    // in-flight timer dispatch (its error is recorded under the lock), so
-    // the flushError check below cannot race past a failing tail flush.
-    drainDispatch(barrier = true)
-    synchronized {
-      if (flushError != null) throw new IllegalStateException(flushError)
-    }
+    if (failure != null) throw failure
+    stopped = true
+    rollOrDiscard()
     // best-effort temp dir cleanup (empty after roll deletes)
     try Files.deleteIfExists(dir) catch { case _: Exception => () }
   }
@@ -264,16 +185,9 @@ final class RollingFileWriter(
   /** Stop WITHOUT flushing — rollback semantics for graceful abort: the
     * in-flight file is deleted so no post-close ingest can happen
     * (reference: FileWriter.java:216-237 rollback). */
-  def abort(): Unit = synchronized {
+  def abort(): Unit = {
     stopped = true
     discardOpenFile()
-    // rollback: staged-but-undispatched files must never reach ingest
-    var f = pending.pollFirst()
-    while (f != null) {
-      try Files.deleteIfExists(Path.of(f.path)) catch { case _: Exception => () }
-      f = pending.pollFirst()
-    }
-    if (timer != null) { timer.cancel(); timer = null }
     try Files.deleteIfExists(dir) catch { case _: Exception => () }
   }
 }

@@ -29,10 +29,6 @@ final case class SinkRecord(
     key: Array[Byte],
     value: Array[Byte],
     headers: Seq[RecordHeader] = Nil) {
-  def isTombstone: Boolean = value == null
-  def valueString: String = if (value == null) "" else new String(value, java.nio.charset.StandardCharsets.UTF_8)
-  def header(name: String): Option[RecordHeader] = headers.find(_.key == name)
-
   /** ` headers=[k=v, ...]` segment for DLQ metadata keys (empty when the
     * record has none). Values rendered UTF-8 — Kafka headers are
     * overwhelmingly string-valued and the DLQ key is a forensic field. */

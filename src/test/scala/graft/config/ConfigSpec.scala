@@ -1,5 +1,6 @@
 package graft.config
 
+import graft.ingest.RetryPolicy
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Mirrors the reference's config-layer tests:
@@ -91,7 +92,7 @@ class ConfigSpec extends AnyFunSuite {
     val c = SinkConfig(mappings = Seq(mapping()))
     assert(c.flushSizeBytes == 1024 * 1024)
     assert(c.flushIntervalMs == 30000)
-    assert(c.maxRetryAttempts == 31)
+    assert(RetryPolicy(c.maxRetryTimeMs, c.retryBackoffMs).maxAttempts == 31)
     assert(c.behaviorOnError == ErrorBehavior.Fail)
     assert(!c.dlqEnabled)
   }
@@ -117,7 +118,7 @@ class ConfigSpec extends AnyFunSuite {
       "misc.deadletterqueue.security.protocol" -> "SASL_SSL",
       "misc.deadletterqueue.sasl.mechanism" -> "PLAIN",
       "kusto.validation.table.enable" -> "true"))
-    assert(c.flushSizeBytes == 4096 && c.maxRetryAttempts == 13)
+    assert(c.flushSizeBytes == 4096 && RetryPolicy(c.maxRetryTimeMs, c.retryBackoffMs).maxAttempts == 13)
     assert(c.behaviorOnError == ErrorBehavior.Log && c.dlqEnabled)
     assert(c.dlqBootstrapServers == Seq("k1:9092", "k2:9092"))
     assert(c.enableTableValidation)

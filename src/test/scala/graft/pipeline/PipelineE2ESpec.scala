@@ -43,6 +43,21 @@ object FlakyLocal {
   def reset(id: String): Unit = { budgets.remove(id); wins.remove(id) }
 }
 
+/** Every ingest throws a plain `RuntimeException` — neither transient nor
+  * permanent, so the retry loop does not catch it. Calls are counted in a
+  * registry keyed by id. */
+final class DiskFullClient(id: String) extends graft.ingest.IngestClient {
+  def ingest(file: graft.sink.StagedFile, target: IngestTarget): graft.ingest.IngestionStatus = {
+    DiskFullClient.calls(id).incrementAndGet()
+    throw new RuntimeException("disk full")
+  }
+}
+object DiskFullClient {
+  private val counts = new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicInteger]
+  def calls(id: String): java.util.concurrent.atomic.AtomicInteger =
+    counts.computeIfAbsent(id, _ => new java.util.concurrent.atomic.AtomicInteger(0))
+}
+
 class PipelineE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
   private lazy val spark = SparkSession.builder()
     .master("local[4]")
@@ -540,6 +555,37 @@ class PipelineE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
       sc.removeSparkListener(listener)
       spark.listenerManager.unregister(planListener)
     }
+  }
+
+  test("LOG mode with DLQ: a failed roll fails the batch at once, dead-letters nothing, and a replay lands each record once") {
+    import spark.implicits._
+    val tablesRoot = Files.createTempDirectory("e2e-rollfail").toString
+    InMemoryDlq.reset("e2e-rollfail")
+    val cfg = SinkConfig(
+      mappings = Seq(TableMapping("topicA", "db1", "tableA")),
+      flushSizeBytes = 1 << 20, flushIntervalMs = 0, maxRetryTimeMs = 20, retryBackoffMs = 10,
+      behaviorOnError = ErrorBehavior.Log, dlqTopic = Some("dlq-topic"),
+      tempDir = Files.createTempDirectory("e2e-stage-rollfail").toString)
+    val batch = (0 until 5).map(i => jsonRec("topicA", 0, i, "a", i))
+      .map(r => (r.topic, r.partition, r.offset, r.key, r.value))
+      .toDF("topic", "partition", "offset", "key", "value").coalesce(1)
+    val metrics = SinkMetrics.forSpark(spark)
+    val dlq = Some(() => new InMemoryDlq("e2e-rollfail"))
+    import scala.jdk.CollectionConverters._
+    def deadLettered = InMemoryDlq.state("e2e-rollfail").asScala.map(d => new String(d._1, UTF_8)).toSeq
+
+    val failing = new KustoSparkPipeline(cfg, () => new DiskFullClient("e2e-rollfail"), dlq, metrics)
+    val e = intercept[Exception](failing.processBatch(batch, 0L))
+    assert(messages(e).contains("disk full"), messages(e))
+    assert(DiskFullClient.calls("e2e-rollfail").get() == 1, "the failed roll ends the partition")
+    assert(deadLettered.isEmpty, s"a roll failure is not a per-record failure: $deadLettered")
+    assert(metrics.snapshot("records-failed") == 0 && metrics.snapshot("dlq-records-sent") == 0)
+
+    val healed = new KustoSparkPipeline(cfg, () => new LocalTableIngestClient(tablesRoot), dlq, metrics)
+    healed.processBatch(batch, 0L)
+    val landed = spark.read.json(s"$tablesRoot/db1/tableA").select("vlong").as[Long].collect().sorted
+    assert(landed.toSeq == (0L until 5L))
+    assert(deadLettered.isEmpty)
   }
 
   test("LOG mode with DLQ: unroutable records dead-letter instead of failing the batch") {

@@ -3,12 +3,16 @@ package graft.sink
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path}
 import java.util.zip.GZIPInputStream
+import jdk.jfr.Recording
+import jdk.jfr.consumer.RecordingFile
 import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Mirrors the reference's FileWriterTest.java:107-174 (roll-by-size
-  * counts, residual open file, gzip round-trip) plus timer flush,
-  * per-record roll, naming, and abort/rollback.
+  * counts, residual open file, gzip round-trip) plus time rolls, failed
+  * rolls, per-record roll, naming, abort/rollback, and that the writer
+  * starts no thread.
   */
 class RollingFileWriterSpec extends AnyFunSuite {
   private def tmp(): String = Files.createTempDirectory("rfw-test").toString
@@ -60,15 +64,28 @@ class RollingFileWriterSpec extends AnyFunSuite {
   test("timer flushes a dirty file after flushIntervalMs") {
     val rolls = ArrayBuffer.empty[StagedFile]
     val w = new RollingFileWriter(tmp(), "t", 0, JsonLinesWriter,
-      flushSizeBytes = 1 << 20, flushIntervalMs = 150, onRoll = rolls += _)
+      flushSizeBytes = 1 << 20, flushIntervalMs = 100, onRoll = rolls += _)
     w.write(rec(7))
     assert(rolls.isEmpty, "not yet — interval hasn't elapsed")
-    val deadline = System.nanoTime() + 5_000_000_000L
-    while (rolls.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
-    assert(rolls.size == 1 && rolls.head.numRecords == 1)
-    assert(!w.isDirty)
+    Thread.sleep(150)
+    w.write(rec(8)) // past the deadline: rolls the old file, then starts the next
+    assert(rolls.map(f => (f.firstOffset, f.numRecords)) == Seq((7L, 1L)))
+    assert(w.isDirty, "the late record opened a new file")
     w.close()
-    assert(rolls.size == 1, "close after timer flush must not re-ingest")
+    assert(rolls.map(f => (f.firstOffset, f.numRecords)) == Seq((7L, 1L), (8L, 1L)),
+      "close rolls the residual")
+  }
+
+  test("an interval of Long.MaxValue / 4 ms never rolls by time") {
+    val rolls = ArrayBuffer.empty[StagedFile]
+    val w = new RollingFileWriter(tmp(), "t", 0, JsonLinesWriter,
+      flushSizeBytes = 1 << 20, flushIntervalMs = Long.MaxValue / 4, onRoll = rolls += _)
+    w.write(rec(0))
+    Thread.sleep(150)
+    w.write(rec(1))
+    assert(rolls.isEmpty)
+    w.close()
+    assert(rolls.map(_.numRecords) == Seq(2L))
   }
 
   test("staged file names follow kafka_{topic}_{partition}_{offset}.{ext}.gz") {
@@ -112,72 +129,72 @@ class RollingFileWriterSpec extends AnyFunSuite {
   }
 
   test("timer-flush ingest failure with no subsequent write fails close()") {
+    var calls = 0
     val w = new RollingFileWriter(tmp(), "t", 0, JsonLinesWriter,
       flushSizeBytes = 1 << 20, flushIntervalMs = 100,
-      onRoll = _ => throw new RuntimeException("ingest down"))
+      onRoll = _ => { calls += 1; throw new RuntimeException("ingest down") })
     w.write(rec(0))
-    val deadline = System.nanoTime() + 5_000_000_000L
-    while (w.isDirty && System.nanoTime() < deadline) Thread.sleep(20)
-    Thread.sleep(50) // let the timer thread finish the failing dispatch
+    Thread.sleep(150)
     val e = intercept[IllegalStateException](w.close())
     assert(e.getMessage.contains("ingest down"))
+    assert(calls == 1)
   }
 
-  test("timed flush does not block concurrent writes during a slow ingest") {
+  test("a failed time roll fails the triggering write, every later write, and close()") {
+    var staged: String = null
+    val w = new RollingFileWriter(tmp(), "t", 0, JsonLinesWriter,
+      flushSizeBytes = 1 << 20, flushIntervalMs = 100,
+      onRoll = f => { staged = f.path; throw new RuntimeException("ingest down") })
+    w.write(rec(0))
+    Thread.sleep(150)
+    val first = intercept[RollFailedException](w.write(rec(1)))
+    assert(first.getMessage.contains("ingest down") && staged.endsWith("kafka_t_0_0.json.gz"))
+    assert(!Files.exists(Path.of(staged)), "the staged file is deleted after a failed onRoll too")
+    assert(intercept[RollFailedException](w.write(rec(2))).getMessage.contains("ingest down"))
+    assert(intercept[RollFailedException](w.close()).getMessage.contains("ingest down"))
+  }
+
+  test("time and size rolls reach onRoll in offset order") {
     val rolls = ArrayBuffer.empty[StagedFile]
-    val ingestGate = new java.util.concurrent.CountDownLatch(1)
-    val ingestStarted = new java.util.concurrent.CountDownLatch(1)
     val w = new RollingFileWriter(tmp(), "t", 0, JsonLinesWriter,
-      flushSizeBytes = 1 << 20, flushIntervalMs = 100,
-      onRoll = f => { ingestStarted.countDown(); ingestGate.await(); rolls += f })
-    w.write(rec(0))
-    assert(ingestStarted.await(5, java.util.concurrent.TimeUnit.SECONDS),
-      "timer flush should have started the ingest")
-    // ingest is parked inside onRoll on the timer thread; writes must proceed
-    val t0 = System.nanoTime()
-    (1L until 5L).foreach(i => w.write(rec(i)))
-    val writeMs = (System.nanoTime() - t0) / 1_000_000
-    ingestGate.countDown()
-    w.close()
-    assert(writeMs < 2000, s"writes blocked ${writeMs}ms behind the parked ingest")
-    assert(rolls.map(_.numRecords).sum == 5)
+      flushSizeBytes = 100, flushIntervalMs = 100, onRoll = rolls += _)
+    (0L until 5L).foreach(i => w.write(rec(i)))
+    Thread.sleep(150)
+    (5L until 20L).foreach(i => w.write(rec(i))) // time roll of 0–4, size roll of 5–14
+    Thread.sleep(150)
+    (20L until 23L).foreach(i => w.write(rec(i))) // time roll of 15–19
+    w.close() // residual 20–22
+    assert(rolls.map(f => (f.firstOffset, f.lastOffset)) == Seq((0L, 4L), (5L, 14L), (15L, 19L), (20L, 22L)))
   }
 
-  test("close() barriers on an in-flight timer dispatch and surfaces its failure") {
-    val ingestStarted = new java.util.concurrent.CountDownLatch(1)
-    val w = new RollingFileWriter(tmp(), "t", 0, JsonLinesWriter,
-      flushSizeBytes = 1 << 20, flushIntervalMs = 100,
-      onRoll = _ => { ingestStarted.countDown(); Thread.sleep(300); throw new RuntimeException("ingest down") })
-    w.write(rec(0))
-    assert(ingestStarted.await(5, java.util.concurrent.TimeUnit.SECONDS))
-    // dispatch is in flight on the timer thread RIGHT NOW — no sleep:
-    // close() must block on the dispatch barrier, observe the recorded
-    // error, and fail the batch (the pre-fix writer returned success here
-    // and the ingest failure was silently swallowed after offsets commit)
-    val e = intercept[IllegalStateException](w.close())
-    assert(e.getMessage.contains("ingest down"))
-  }
-
-  test("staged files reach ingest in offset order when timer and task threads race") {
-    val order = ArrayBuffer.empty[Long]
-    val gate = new java.util.concurrent.CountDownLatch(1)
-    val ingestStarted = new java.util.concurrent.CountDownLatch(1)
-    val w = new RollingFileWriter(tmp(), "t", 0, JsonLinesWriter,
-      flushSizeBytes = 100, flushIntervalMs = 100,
-      onRoll = f => {
-        order.synchronized(order += f.firstOffset)
-        if (f.firstOffset == 0) { ingestStarted.countDown(); gate.await() }
-      })
-    w.write(rec(0)) // timer will stage this file (firstOffset 0)
-    assert(ingestStarted.await(5, java.util.concurrent.TimeUnit.SECONDS))
-    // timer thread is parked inside onRoll holding the dispatch lock; the
-    // task thread now rolls two MORE files by size — they must queue
-    // behind the timer's file, not jump ahead of offset 0
-    (1L until 21L).foreach(i => w.write(rec(i)))
-    gate.countDown()
-    w.close()
-    assert(order.toSeq == Seq(0L, 1L, 11L),
-      s"ingest order must be staging (offset) order, got $order")
+  test("a writer that rolls 50 files by size starts no thread") {
+    val recording = new Recording()
+    recording.enable("jdk.ThreadStart")
+    val dump = Files.createTempFile("thread-start", ".jfr")
+    val rolls = ArrayBuffer.empty[StagedFile]
+    recording.start()
+    try {
+      val control = new Thread(() => (), "rfw-control") // the recording sees thread starts
+      control.start(); control.join()
+      val w = new RollingFileWriter(tmp(), "t", 0, JsonLinesWriter,
+        flushSizeBytes = 100, flushIntervalMs = 30000, onRoll = rolls += _)
+      (0L until 500L).foreach(i => w.write(rec(i)))
+      w.close()
+    } finally {
+      recording.stop()
+      recording.dump(dump)
+      recording.close()
+    }
+    assert(rolls.size == 50)
+    val me = Thread.currentThread().getName
+    def name(t: jdk.jfr.consumer.RecordedThread) = Option(t).map(_.getJavaName).getOrElse("")
+    val started = RecordingFile.readAllEvents(dump).asScala
+      .filter(e => e.getEventType.getName == "jdk.ThreadStart" && name(e.getThread("parentThread")) == me)
+      .map(e => name(e.getThread("thread")))
+    assert(started.contains("rfw-control"), "the control thread start was not recorded")
+    val byWriter = started.filterNot(_ == "rfw-control")
+    assert(byWriter.isEmpty,
+      s"${byWriter.size} thread starts: ${byWriter.groupBy(_.takeWhile(_ != '-')).map { case (n, ts) => s"$n ×${ts.size}" }.mkString(", ")}")
   }
 
   test("staged file is deleted after the roll callback completes") {
